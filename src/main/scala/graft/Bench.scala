@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds at
@@ -59,7 +61,7 @@ object Bench {
     // Warm-up: codegen + JIT at the smallest SF; failures surface in the
     // timed pass instead of aborting the bench.
     SparkEntry.queries.foreach { case (_, fn) =>
-      try Materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+      try Materialize(fn(spark, warmDir)) catch { case NonFatal(_) => () }
     }
     // Cold/warm split (round-12 verdict #1): the shared corpus
     // artifacts — near-dup pair table, brute top-k reference, k-NN
@@ -101,7 +103,7 @@ object Bench {
     val preT0 = System.nanoTime()
     artifactProducers.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
-        try Materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
+        try Materialize(fn(spark, sfDir)) catch { case NonFatal(_) => () }
       }
     }
     val prebuildWallSecs = (System.nanoTime() - preT0) / 1e9
@@ -122,7 +124,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { Materialize(fn(spark, sfDir)); true }
-        catch { case _: Throwable => if (recordErr) errors += name; false }
+        catch { case NonFatal(_) => if (recordErr) errors += name; false }
       if (BuildLedger.mark() > m0) builtInPass += name
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }

@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -29,13 +32,15 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Ordered variants: deterministic row order for the DuckDB hash compare
     // (Bench runs the same queries without the presentation sort).
-    Catalog.ordered
+    val failed = Catalog.ordered
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -55,5 +60,12 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // One summary line, and a non-zero exit, so a failed query cannot
+    // pass unnoticed.
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
+    System.err.println("[verify] 0 failed")
   }
 }

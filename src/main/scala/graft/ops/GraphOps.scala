@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -948,7 +950,7 @@ object GraphOps {
       try {
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
-      } catch { case _: Throwable => 0L }
+      } catch { case NonFatal(_) => 0L }
     }.sum
     if (bytes <= 0L) spark.sparkContext.defaultParallelism
     else math.max(1, math.min(bytes / (4L << 20), 1L << 20).toInt + 1)

@@ -79,12 +79,23 @@ object EgvStreams {
   def categorizeSimpleTopology(parsed: DataFrame): DataFrame =
     EgvOps.categorizeSimple(parsed)
 
-  /** The KTable-lookup topology (CategorizeWithKTableLookup.java:47-79):
-    * ranges is a broadcast dimension snapshot — the Spark-native
-    * equivalent of the reference's fully-scanned state store (§3.2). */
-  def categorizeLookupTopology(parsed: DataFrame, ranges: DataFrame): DataFrame =
-    EgvOps.categorizeWithLookup(
-      parsed.withColumn("ts", col("systemTs")), ranges)
+  /** The KTable-lookup topology (CategorizeWithKTableLookup.java:47-79),
+    * the Spark-native equivalent of the reference's fully-scanned local
+    * state store (§3.2). Every trigger re-plans the query, and a join
+    * rebuilds its static side's broadcast each time: one more Spark job
+    * and a TorrentBroadcast per micro-batch. So when `ranges` is
+    * driver-local (a `LocalRelation`, as `Seq(...).toDF` makes) and its
+    * intervals are pairwise disjoint, its rows are read once, here, and
+    * inlined as one CASE chain ([[EgvOps.inlineRangeLookup]]). Any other
+    * ranges frame (a table, a per-batch snapshot whose updates must land
+    * at the next batch boundary, or overlapping intervals, where the join
+    * emits every match) keeps the broadcast join of
+    * [[EgvOps.categorizeWithLookup]]. Both give the same columns. */
+  def categorizeLookupTopology(parsed: DataFrame, ranges: DataFrame): DataFrame = {
+    val events = parsed.withColumn("ts", col("systemTs"))
+    EgvOps.inlineRangeLookup(events, ranges)
+      .getOrElse(EgvOps.categorizeWithLookup(events, ranges))
+  }
 
   /** G5 — tumbling-window aggregation with explicit late-data policy
     * (the watermark the reference never had to choose). */

@@ -57,16 +57,18 @@ object IdempotentBulkSink {
         .otherwise(concat(length(s).cast("string"), lit(":"), s))
     }: _*)
 
+  /** Each row as (`__id`, `__doc`): its deterministic doc id and the
+    * whole row as JSON. */
+  private def payload(df: DataFrame, keyCols: Seq[String]): DataFrame =
+    df.select(docId(keyCols).as("__id"), to_json(struct(df.columns.map(col): _*)).as("__doc"))
+
   /** The foreachBatch body: serialize rows, bulk-upsert with deterministic
     * ids, bounded bulk size (the reference's max.poll.records=100 analog).
     * Runs on the driver per micro-batch after collecting the (small,
     * post-aggregation) batch — for large sinks use [[writeBatchDistributed]]. */
   def writeBatch(client: BulkClient, keyCols: Seq[String], bulkSize: Int = 100)
                 (df: DataFrame, batchId: Long): Unit = {
-    val payload = df.withColumn("__id", docId(keyCols))
-      .withColumn("__doc", to_json(struct(df.columns.map(col): _*)))
-      .select("__id", "__doc")
-    payload.collect()
+    payload(df, keyCols).collect()
       .map { case Row(id: String, doc: String) => (id, doc) }
       .grouped(bulkSize)
       .foreach(chunk => client.bulkUpsert(chunk.toSeq))
@@ -82,10 +84,7 @@ object IdempotentBulkSink {
   def writeBatchDistributed(clientFactory: () => BulkClient, keyCols: Seq[String],
                             bulkSize: Int = 100)
                            (df: DataFrame, batchId: Long): Unit = {
-    val payload = df.withColumn("__id", docId(keyCols))
-      .withColumn("__doc", to_json(struct(df.columns.map(col): _*)))
-      .select("__id", "__doc")
-    payload.foreachPartition { (rows: Iterator[Row]) =>
+    payload(df, keyCols).foreachPartition { (rows: Iterator[Row]) =>
       val client = clientFactory()
       rows.map { case Row(id: String, doc: String) => (id, doc) }
         .grouped(bulkSize)

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.Catalog
@@ -38,7 +40,7 @@ object Profile {
           java.nio.file.Files.walk(p).iterator().asScala.toSeq
             .sortBy(-_.getNameCount)
             .foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch { case _: Throwable => () }))
+        } catch { case NonFatal(_) => () }))
       p.toString
     }
     spark.conf.set("graft.knn.dir",

@@ -2,11 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.Schemas
+import graft.ops.EgvOps
 import graft.streaming.{EgvStreams, IdempotentBulkSink, InMemoryBulkClient, StatefulOps}
 
 /** End-to-end streaming tests: MemoryStream in, memory/foreachBatch sink
@@ -39,25 +40,120 @@ class StreamingSpec extends SparkSpec {
     assert(vals.toSeq === Seq(265))
   }
 
+  private def rangesDf(rows: (Int, Option[Int], Int, Int, Int)*) = {
+    import spark.implicits._
+    rows.toSeq.toDF("range_id", "start_sec", "end_sec", "lower_bound", "upper_bound")
+  }
+
+  private def fixtureRangesDf = {
+    import spark.implicits._
+    Schemas.fixtureRanges
+      .map(r => (r.rangeId, r.startSec, r.endSec, r.lowerBound, r.upperBound))
+      .toDF("range_id", "start_sec", "end_sec", "lower_bound", "upper_bound")
+  }
+
   test("categorize-lookup topology end-to-end reproduces reference asserts") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[KafkaRec]
-    val ranges = Schemas.fixtureRanges
-      .map(r => (r.rangeId, r.startSec, r.endSec, r.lowerBound, r.upperBound))
-      .toDF("range_id", "start_sec", "end_sec", "lower_bound", "upper_bound")
-    val out = EgvStreams.categorizeLookupTopology(
-      EgvStreams.parseEgvs(in.toDF()), ranges)
-    val q = out.writeStream.format("memory").queryName("categorized")
-      .outputMode("append").start()
-    in.addData(
+    val recs = Seq(
       KafkaRec("robert", egvJson(75, "2020-11-02T02:00:00"), new Timestamp(0)),
       KafkaRec("robert", egvJson(100, "2020-11-02T12:00:00"), new Timestamp(1)),
-      KafkaRec("robert", egvJson(265, "2020-11-02T19:00:00"), new Timestamp(2)))
-    q.processAllAvailable(); q.stop()
+      KafkaRec("robert", egvJson(265, "2020-11-02T19:00:00"), new Timestamp(2)),
+      KafkaRec("robert", egvJson(150, "2020-11-02T23:30:00"), new Timestamp(3)),
+      // No time of day: no range holds it, so it is dropped.
+      KafkaRec("robert", """{"systemTime":null,"value":120}""", new Timestamp(4)))
+    // Runs the topology as a stream; returns its rows, its schema as
+    // (name, type, nullable) in column order, and the last batch's
+    // executed plan.
+    def streamed(ranges: org.apache.spark.sql.DataFrame, name: String) = {
+      val in = MemoryStream[KafkaRec]
+      val out = EgvStreams.categorizeLookupTopology(EgvStreams.parseEgvs(in.toDF()), ranges)
+      val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+      in.addData(recs: _*)
+      q.processAllAvailable(); q.stop()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan.toString
+      (spark.table(name).collect().map(_.toSeq).toSeq,
+        out.schema.map(f => (f.name, f.dataType, f.nullable)), plan)
+    }
+    def joined(ranges: org.apache.spark.sql.DataFrame) = {
+      val out = EgvOps.categorizeWithLookup(
+        EgvStreams.parseEgvs(recs.map(r => (r.key, r.value, r.timestamp))
+          .toDF("key", "value", "timestamp")).withColumn("ts", col("systemTs")), ranges)
+      (out.collect().map(_.toSeq).toSeq, out.schema.map(f => (f.name, f.dataType, f.nullable)))
+    }
+    def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
+
+    // Driver-local disjoint ranges are inlined, so no batch broadcasts; the
+    // rows, names, types, nullability and column order equal the broadcast
+    // join's, also with a null-start range row (never matches) and with no
+    // ranges at all.
+    for ((name, ranges) <- Seq(
+        "categorized" -> fixtureRangesDf,
+        "categorized_null_start" -> rangesDf((1, Some(0), 43199, 80, 150),
+          (2, None, 86399, 70, 180), (3, Some(43200), 86399, 90, 140)),
+        "categorized_empty" -> rangesDf())) {
+      val (sRows, sSchema, sPlan) = streamed(ranges, name)
+      val (jRows, jSchema) = joined(ranges)
+      assert(sSchema === jSchema, name)
+      assert(sorted(sRows) === sorted(jRows), name)
+      assert(!sPlan.contains("BroadcastExchange") && !sPlan.contains("Join"), s"$name:\n$sPlan")
+    }
     val got = spark.table("categorized").select("value", "range_id", "in_range")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2))).toSet
-    assert(got === Set((75, 1, "false"), (100, 2, "true"), (265, 2, "false")))
+    assert(got === Set((75, 1, "false"), (100, 2, "true"), (265, 2, "false"), (150, 3, "true")))
+
+    // Overlapping ranges keep the join: an event inside both emits both.
+    val overlapping = rangesDf((1, Some(0), 43199, 80, 150), (2, Some(0), 86399, 70, 180))
+    val (oRows, _, oPlan) = streamed(overlapping, "categorized_overlap")
+    assert(oPlan.contains("BroadcastExchange"), oPlan)
+    assert(sorted(oRows) === sorted(joined(overlapping)._1))
+    assert(spark.table("categorized_overlap").filter(col("value") === 75)
+      .select("range_id").as[Int].collect().sorted.toSeq === Seq(1, 2))
+  }
+
+  test("categorize-lookup into the idempotent sink restarts from its checkpoint " +
+    "with the output of an uninterrupted run") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val batches = Seq(
+      Seq(KafkaRec("robert", egvJson(75, "2020-11-02T02:00:00"), new Timestamp(0)),
+        KafkaRec("robert", egvJson(100, "2020-11-02T12:00:00"), new Timestamp(1))),
+      Seq(KafkaRec("robert", egvJson(265, "2020-11-02T19:00:00"), new Timestamp(2)),
+        KafkaRec("ana", egvJson(100, "2020-11-02T19:00:00"), new Timestamp(3))),
+      Seq(KafkaRec("ana", egvJson(150, "2020-11-02T23:30:00"), new Timestamp(4))))
+    // Runs every batch through one stream; `failAt` fails that batch's
+    // bulk write once, then restarts from the same checkpoint.
+    def run(failAt: Option[Int]): Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      InMemoryBulkClient.store.clear()
+      val in = MemoryStream[KafkaRec]
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-lookup-ckpt").toString
+      def start() = EgvStreams.categorizeLookupTopology(
+          EgvStreams.parseEgvs(in.toDF()), fixtureRangesDf)
+        .writeStream
+        .foreachBatch(IdempotentBulkSink.writeBatch(
+          InMemoryBulkClient, Seq("key", "systemTime")) _)
+        .option("checkpointLocation", ckpt)
+        .start()
+      var q = start()
+      for ((batch, i) <- batches.zipWithIndex) {
+        if (failAt.contains(i)) InMemoryBulkClient.failNextBatches = 1
+        in.addData(batch: _*)
+        if (failAt.contains(i)) {
+          intercept[Exception] { q.processAllAvailable() }
+          q.stop()
+          q = start()
+        }
+        q.processAllAvailable()
+      }
+      q.stop()
+      InMemoryBulkClient.store.asScala.toMap
+    }
+    val uninterrupted = run(None)
+    assert(uninterrupted.size === batches.flatten.size)
+    assert(run(Some(1)) === uninterrupted)
+    assert(InMemoryBulkClient.failNextBatches === 0)
   }
 
   test("windowed counts with watermark aggregate per 10-minute window") {
