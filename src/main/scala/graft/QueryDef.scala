@@ -17,9 +17,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class QueryDef(
     name: String,
-    run: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None,
     presentOrder: Seq[String] = Seq.empty) {
+
+  /** The query on session `s` over the tables in `d`. Installs Graft's
+    * functions and rules first, so the result and the plan do not depend
+    * on which queries ran earlier in the session or how it was built. */
+  def run(s: SparkSession, d: String): DataFrame = {
+    graft.catalyst.GraftFunctions.register(s)
+    body(s, d)
+  }
 
   /** The query with deterministic presentation order, for oracle dumps. */
   def runOrdered(s: SparkSession, d: String): DataFrame = {
@@ -62,7 +70,7 @@ object Catalog {
     graft.queries.TimeSeriesQueries.defs
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(d => d.name -> d.run).toMap
+    all.map(d => d.name -> (d.run _)).toMap
 
   def ordered: Map[String, (SparkSession, String) => DataFrame] =
     all.map(d => d.name -> (d.runOrdered _)).toMap

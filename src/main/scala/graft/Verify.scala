@@ -3,7 +3,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -21,14 +20,8 @@ object Verify {
         s"[verify] FILTERED RUN (${names.size} queries): $outDir is NOT a " +
           "full dump; oracle_sql.json covers only the filtered subset.")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // Ordered variants: deterministic row order for the DuckDB hash compare
     // (Bench runs the same queries without the presentation sort).

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 
 /** `array_dot(a, b)` — dot product of two float/double arrays in double
   * precision with fixed left-to-right accumulation.
@@ -127,31 +127,39 @@ object GraftFunctions {
         "html_entity_decode"),
       (children: Seq[Expression]) => HtmlEntityDecode(children(0))))
 
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions config). Also registers the `minhash_sketch` UDAF — the
-    * typed [[MinHashSketchAgg]] surfaced to SQL/DataFrame groupBy, which
-    * avoids the tuple-encoder overhead of the groupByKey path. */
+  /** Installs Graft's functions, optimizer rules and planner strategy on
+    * a session; idempotent. The only callers are [[graft.QueryDef.run]]
+    * (the catalog boundary, so a session built outside this repo is
+    * covered before any query body runs) and [[graft.GraftSession]]. Also
+    * registers the `minhash_sketch` UDAF — the typed [[MinHashSketchAgg]]
+    * surfaced to SQL/DataFrame groupBy, which avoids the tuple-encoder
+    * overhead of the groupByKey path. */
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    // Install only what the session lacks: replacing a function logs a
+    // WARN line, and every query run calls this.
+    def missing(name: String) = !registry.functionExists(FunctionIdentifier(name))
     fns.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
+      if (missing(id.funcName))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
-    spark.udf.register("minhash_sketch",
-      org.apache.spark.sql.functions.udaf(
-        new MinHashSketchAgg(MinHashSketchAgg.SketchK),
-        org.apache.spark.sql.Encoders.scalaLong))
-    spark.udf.register("bloom_bits",
-      org.apache.spark.sql.functions.udaf(
-        new BloomSetAgg, org.apache.spark.sql.Encoders.scalaLong))
-    spark.udf.register("cms_counts",
-      org.apache.spark.sql.functions.udaf(
-        new CmsAgg, org.apache.spark.sql.Encoders.scalaLong))
-    // Runtime twin of the extensions-class injection, for sessions built
-    // without the config (the driver's Verify/Bench mains): the top-k
-    // rewrite needs both its optimizer rule and its planner strategy,
-    // and the banded-join rewrite its rule — without this, the natural
-    // abs(Δt)<=tol form would silently keep the hot-key-quadratic plan
-    // in any session not configured with GraftSparkExtensions.
+    if (missing("minhash_sketch"))
+      spark.udf.register("minhash_sketch",
+        org.apache.spark.sql.functions.udaf(
+          new MinHashSketchAgg(MinHashSketchAgg.SketchK),
+          org.apache.spark.sql.Encoders.scalaLong))
+    if (missing("bloom_bits"))
+      spark.udf.register("bloom_bits",
+        org.apache.spark.sql.functions.udaf(
+          new BloomSetAgg, org.apache.spark.sql.Encoders.scalaLong))
+    if (missing("cms_counts"))
+      spark.udf.register("cms_counts",
+        org.apache.spark.sql.functions.udaf(
+          new CmsAgg, org.apache.spark.sql.Encoders.scalaLong))
+    // The top-k rewrite needs both its optimizer rule and its planner
+    // strategy, and the banded-join rewrite its rule. Runtime
+    // `experimental` install reaches any session, including a bare one
+    // built without any Graft configuration.
     if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKStrategy
@@ -163,19 +171,5 @@ object GraftFunctions {
         .contains(graft.plans.BandedJoinRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.BandedJoinRule
-  }
-}
-
-/** `spark.sql.extensions=graft.catalyst.GraftSparkExtensions` — the
-  * library's Catalyst extension point: injects [[GraftFunctions]] and the
-  * [[graft.plans.BandedJoinRule]] optimizer rewrite (plain
-  * `abs(lt − rt) <= tol` temporal joins become hot-key-proof banded
-  * equi-joins). */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.fns.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.BandedJoinRule)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

@@ -410,7 +410,6 @@ object DedupOps {
   def contaminationBloomAudit(docs: DataFrame, textCol: String, idCol: String,
                               evalPred: Column): DataFrame = {
     import graft.catalyst.BloomSetAgg
-    graft.catalyst.GraftFunctions.register(docs.sparkSession)
     val evalSh = shingleInv(docs.filter(evalPred), textCol, idCol)
       .select("h").distinct()
     val bloom = evalSh.agg(expr("bloom_bits(h)").as("__bits"))
@@ -1321,9 +1320,7 @@ object DedupOps {
   val DriverCcMaxEdges: Long = 1L << 20
 
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
-                          driverFastPathMaxEdges: Long = DriverCcMaxEdges,
-                          onRound: (Int, Long, () => String) => Unit =
-                            (_, _, _) => ()): DataFrame = {
+                          driverFastPathMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
     val isLongIds = pairs.schema("doc_a").dataType ==
       org.apache.spark.sql.types.LongType &&
       pairs.schema("doc_b").dataType == org.apache.spark.sql.types.LongType
@@ -1344,7 +1341,7 @@ object DedupOps {
       // fall through to the distributed path (pairs recomputed — the
       // above-threshold case where one extra pass is noise)
     }
-    connectedComponentsDistributed(pairs, maxIters, onRound)
+    connectedComponentsDistributed(pairs, maxIters)
   }
 
   /** Driver union-find with path compression and min-root union: exact
@@ -1371,12 +1368,8 @@ object DedupOps {
     parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("doc_id", "cluster")
   }
 
-  /** `onRound(iter, changed, planThunk)` fires after every propagation
-    * round with the pre-checkpoint round plan available on demand — the
-    * scale-drive observability hook (`graft.tools.CcScale`); the default
-    * is a no-op. */
-  private def connectedComponentsDistributed(pairs: DataFrame, maxIters: Int,
-      onRound: (Int, Long, () => String) => Unit = (_, _, _) => ()): DataFrame = {
+  private def connectedComponentsDistributed(pairs: DataFrame,
+                                             maxIters: Int): DataFrame = {
     // Persist the edge set: without it every propagation round (and the
     // fixpoint check) would recompute the entire upstream pair pipeline.
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1398,19 +1391,15 @@ object DedupOps {
       // referenced twice below (recomputed, cheap — it roots at the
       // checkpointed `labels` leaf), and checkpointing `jumped` keeps the
       // NEXT round's plan depth constant.
-      val jumpedPlan = prop
+      val jumped = prop
         .join(prop.select(col("id").as("label"), col("label").as("label2")),
           Seq("label"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("label2"), col("label")))
             .as("label"))
-      val jumped =
-        jumpedPlan.localCheckpoint() // eager: truncates lineage, materializes round
+        .localCheckpoint() // eager: truncates lineage, materializes round
       changed = jumped.as("n").join(labels.as("o"), "id")
         .filter(col("n.label") < col("o.label")).count()
-      onRound(iter, changed,
-        () => jumpedPlan.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       // Superseded rounds' checkpoint blocks are reclaimed by Spark's
       // ContextCleaner once the old `labels` reference is GC'd —
       // Dataset.unpersist does not release local-checkpoint RDDs.

@@ -202,7 +202,7 @@ object GraphOps {
     * and scattered to the triangle's three undirected edges — NOT the
     * raw two-sided wedge join, whose Σ deg(w)² blows up quadratically
     * inside one join group at a celebrity hub (the "last reducer";
-    * the TrussScale drive plants a 2¹⁷-leaf star and measures flat
+    * PLANS.md's TrussScale drive plants a 2¹⁷-leaf star and measures flat
     * per-round cost, where the raw wedge would emit C(2¹⁷,2) ≈ 8.6e9
     * rows). Oriented out-degree is O(√m), so the apex wedge join is
     * O(m^1.5) worst-case. Values are identical to the raw wedge join,

@@ -36,8 +36,9 @@ object SimOps {
   /** cosine(a, b) in double precision, left-to-right accumulation, via the
     * codegen'd [[graft.catalyst.ArrayDotProduct]] (`array_dot`) — the HOF
     * (`aggregate(zip_with(...))`) version computes identical values but
-    * evaluates interpreted, 100× slower on all-pairs workloads. Callers
-    * must register [[graft.catalyst.GraftFunctions]] on the session.
+    * evaluates interpreted, 100× slower on all-pairs workloads. The
+    * session needs [[graft.catalyst.GraftFunctions]] installed, which
+    * [[graft.QueryDef.run]] and [[graft.GraftSession]] do.
     * Prefer [[withNorm]] + dividing by precomputed norms when one side is
     * scored against many (avoids recomputing norms per pair). */
   def cosine(a: String, b: String): Column =
@@ -793,7 +794,6 @@ object SimOps {
                        saltIvf: String = "ivf",
                        saltPq: String = "pq"): DataFrame = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    graft.catalyst.GraftFunctions.register(vectors.sparkSession)
     val old = vectors.filter(oldPred)
     val batch = withNorm(vectors.filter(!oldPred)
       .select(col("vec_id"), col("embedding")), "embedding", "vn")
@@ -928,7 +928,6 @@ object SimOps {
   def quantizePq(vectors: DataFrame, m: Int, k: Int, dim: Int,
                  salt: String = "pq"): DataFrame = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    graft.catalyst.GraftFunctions.register(vectors.sparkSession)
     val cent: Array[Array[Double]] = vectors
       .withColumn("h", graft.ops.TextOps.hash64(
         concat(lit(salt), col("vec_id").cast("string"))))
@@ -995,7 +994,6 @@ object SimOps {
                 m: Int, k: Int, dim: Int, shortlist: Int,
                 salt: String = "pq"): DataFrame = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    graft.catalyst.GraftFunctions.register(vectors.sparkSession)
     val vRaw = withNorm(vectors.select(col("vec_id"), col("embedding")),
       "embedding", "vn")
     val nrm = col("vn")
@@ -1131,7 +1129,6 @@ object SimOps {
                 cellsPre: Option[(DataFrame, DataFrame, DataFrame)] = None)
   : DataFrame = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    graft.catalyst.GraftFunctions.register(vectors.sparkSession)
     val vRaw = withNorm(vectors.select(col("vec_id"), col("embedding")),
       "embedding", "vn")
     // Coarse cells, assignment, probes: the topKIvf shapes verbatim

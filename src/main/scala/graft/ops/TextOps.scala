@@ -1364,7 +1364,7 @@ object TextOps {
     // 15's measurement: an h-keyed repartition+localCheckpoint won the
     // isolated profile (2.17 → 1.96 s warm) but measured consistently
     // SLOWER inside the full 307-query bench session (+0.4–1.4 s across
-    // three runs) — the r14 MatExp block-manager-pressure mechanism.
+    // three runs) — the block-manager-pressure mechanism in OPTIMIZATION_r14.md.
     // At 100 TB the balance flips; a cluster deployment would take the
     // pairStats `graft.jaccard.checkpoint`-style flag here.
     val sel = winnowSelected(docs, w)
@@ -1583,9 +1583,7 @@ object TextOps {
   }
 
   /** The greedy fold + decode over a frame carrying (w, vocab): adds
-    * (unk, n_pieces_w, tokstr), drops the scratch columns. Shared by
-    * the gated distinct-word shape and the [[wordPieceNaive]]
-    * per-occurrence reference the WpScale harness races it against. */
+    * (unk, n_pieces_w, tokstr), drops the scratch columns. */
   private def wpTokenize(withVocab: DataFrame): DataFrame =
     withVocab
       .withColumn("bounds", expr(s"""
@@ -1638,17 +1636,6 @@ object TextOps {
       words.select(col("w")).distinct().crossJoin(broadcast(vocabRow)))
     wpRollup(words.join(folded, Seq("w")), docs)
   }
-
-  /** Per-OCCURRENCE reference shape — the fold runs on every word
-    * occurrence instead of the distinct-word frame: O(occurrences ×
-    * fold) where the gated plan is O(distinct × fold) + an equi-join.
-    * Results are identical by construction (WpScale asserts the full
-    * checksum); exists ONLY as the scale harness's baseline — never
-    * gate against this shape at corpus scale. */
-  def wordPieceNaive(docs: DataFrame): DataFrame =
-    wpRollup(
-      wpTokenize(wpWords(docs).crossJoin(broadcast(wpVocabRow(docs)))),
-      docs)
 
   /** Viterbi cost base: segmentation cost = n_pieces·WpBig − Σ freq, a
     * single BIGINT whose minimization is the lexicographic (min pieces,
@@ -2034,13 +2021,11 @@ object TextOps {
 
   /** (doc_id, text=stripped) — the composable form of [[htmlStrip]]. */
   def htmlCleanText(docs: DataFrame): DataFrame = {
-    graft.catalyst.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       htmlCleanCol(htmlBlocksCol(col("text"))).as("text"))
   }
 
   def htmlStrip(docs: DataFrame): DataFrame = {
-    graft.catalyst.GraftFunctions.register(docs.sparkSession)
     val blocks = htmlBlocksCol(col("text"))
     val clean = htmlCleanCol(blocks)
     docs.select(col("doc_id"),

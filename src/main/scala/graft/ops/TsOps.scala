@@ -785,7 +785,7 @@ object TsOps {
     // a join on user_id alone enumerates |series|² candidates inside
     // ONE join group before any band filter — quadratic in key
     // popularity, and AQE cannot split it (measured: the naive form
-    // went superlinear at 2^17 readings in the MpScale drive). Anchors
+    // went superlinear at 2^17 readings, PLANS.md's MpScale drive). Anchors
     // replicate to the position buckets their partners can live in
     // ([pos+m, pos+h] for the banded arm, [pos+m, n-1] chunked by
     // [[MpChunk]] for the exact arm); partners project their single

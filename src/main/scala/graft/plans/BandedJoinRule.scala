@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.LongType
   * post-condition, so ONE hot key makes its join group |l_k|·|r_k|:
   * quadratic in key popularity no matter how narrow the window, and AQE
   * cannot split it because the blow-up is inside a single join group
-  * (measured 48.1 s vs 2.9 s at a 2^19-row hot key — `BandScale`,
-  * PLANS.md). [[graft.ops.AsofOps.bandedIntervalJoin]] is the manual
+  * (measured 48.1 s vs 2.9 s at a 2^19-row hot key — the BandScale
+  * drive in PLANS.md). [[graft.ops.AsofOps.bandedIntervalJoin]] is the manual
   * fix; this rule applies the same rewrite AUTOMATICALLY, so user
   * queries in the natural form inherit the density-bounded plan:
   *

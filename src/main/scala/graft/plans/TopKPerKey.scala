@@ -31,6 +31,7 @@ case class TopKPerKey(
     rankAttr: Attribute,
     child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output :+ rankAttr
+  override def producedAttributes: AttributeSet = AttributeSet(rankAttr)
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKey =
     copy(child = newChild)

@@ -103,6 +103,7 @@ case class TopKPerKeyFinalExec(keys: Seq[Expression], order: Seq[SortOrder],
                                k: Int, rankAttr: Attribute, child: SparkPlan)
     extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output :+ rankAttr
+  override def producedAttributes: AttributeSet = AttributeSet(rankAttr)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(keys) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =

@@ -303,7 +303,7 @@ object ClinicalQueries {
     // offset buckets): every (purchase, later-reading) pair within the
     // window, via the hot-key-proof BANDED interval join (the plain
     // user-key + range-filter join is quadratic in a celebrity user's
-    // rows — BandScale's measured failure; the band caps each join
+    // rows — the failure PLANS.md's BandScale drive measured; the band caps each join
     // group at one tolerance cell). Bucket 0 includes the anchor's own
     // reading (δ = 0, inclusive left edge). Integer micro-unit means.
     QueryDef("ref_event_response",

@@ -253,7 +253,6 @@ object DedupQueries {
     // O(n^2) audit arm can never be pointed at a real corpus by accident.
     QueryDef("dedup_embedding_cosine",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val v = SimOps.withNorm(
           SimOps.guardBruteAudit(
             Tables.embeddings(s, d).select("vec_id", "embedding"),
@@ -290,7 +289,6 @@ object DedupQueries {
     // guarded exactness audit.
     QueryDef("dedup_semantic",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.semDedup(Tables.embeddings(s, d), CosineThreshold,
           c = 8, trainRounds = 2, dim = 64)
       },
@@ -363,7 +361,6 @@ object DedupQueries {
     // 100 TB-path pair generator with the iterative CC operator.
     QueryDef("dedup_semantic_clusters",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val pairs = SimOps.cosineLshPairs(
           Tables.embeddings(s, d).select("vec_id", "embedding"),
           CosineThreshold, LshTables)
@@ -386,7 +383,6 @@ object DedupQueries {
     // replicates the identical pipeline so results match exactly.
     QueryDef("dedup_embedding_lsh",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.cosineLshPairs(
           Tables.embeddings(s, d).select("vec_id", "embedding"),
           CosineThreshold, LshTables)

@@ -235,7 +235,6 @@ object IndexQueries {
     // broadcast-sized full-outer join + a 40-row window.
     QueryDef("text_rrf_fusion",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val lex = TextOps.bm25TopK(Tables.documents(s, d),
             nQueryTerms = 1, skip = 10, topK = 20)
           .select(col("doc_id"), col("rank").cast("long").as("lex_rank"))

@@ -79,11 +79,9 @@ object MultimodalQueries {
          AS BIGINT) AS phash
        FROM phu)"""
 
-  /** The `mm_warc_records` fixture blob, shared with
-    * `tools/IntakeScale` so the scale tool's conservation baseline and
-    * the gate always measure the SAME corpus (the oracle mirrors these
+  /** The `mm_warc_records` fixture blob (the oracle mirrors these
     * formulas in SQL). */
-  def warcFixtureBlob(id: Long, nc: Long): Array[Byte] = {
+  private def warcFixtureBlob(id: Long, nc: Long): Array[Byte] = {
     val n = ((nc % 4) + 2).toInt
     val recs = (0 until n).map { i =>
       val tpe =

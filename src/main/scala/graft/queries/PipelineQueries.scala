@@ -876,7 +876,6 @@ object PipelineQueries {
     // four operator families under one oracle.
     QueryDef("pipeline_rag_prep",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val planes = graft.ops.SimOps.hyperplanes(planes = 4, dim = 8, seed = 31L)
         val chunks = Tables.documents(s, d)
           .withColumn("__toks", TextOps.tokens(col("text")))
@@ -938,7 +937,6 @@ object PipelineQueries {
     // machinery their own gates pin.
     QueryDef("pipeline_contrastive_pairs",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         import graft.ops.SimOps
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d),
           SimQueries.KnnK, SimQueries.LshTabs)

@@ -229,7 +229,6 @@ object RelQueries3 {
     // accelerates.
     QueryDef("q_fuzzy_jaro",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val c = Tables.customer(s, d).select(col("c_custkey"),
           col("c_name"), substring(col("c_name"), 10, 7).as("blk"))
         val pairs = c.toDF("key_a", "name_a", "blk")
@@ -434,7 +433,6 @@ object RelQueries3 {
     // the rewrite must be invisible, nulls included.
     QueryDef("q_interval_left_band",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s) // injects BandedJoinRule
         val e = Tables.events(s, d)
           .select(col("event_id"), col("user_id"),
             col("ts").cast("long").as("es"), col("value"))
@@ -570,7 +568,6 @@ object RelQueries3 {
     // row-identical to what the window computes.
     QueryDef("q_topk_per_key",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_custkey"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))

@@ -28,7 +28,7 @@ object SimQueries {
     * same nprobe budget scans better-matched candidates. Training reads
     * at most 256·c hash-ordered vectors (`SimOps.IvfTrainCap` — the
     * FAISS sample rule), so train cost is corpus-size-free. The
-    * `IvfSweep` drive showed FINER cells at a fixed scan fraction are
+    * IvfSweep drive (SURVEY.md) showed FINER cells at a fixed scan fraction are
     * the recall lever (25% scan: 16/4 = 0.56 vs 32/8 = 0.69 at sf0.01)
     * while extra train rounds are flat; 32/10 measured recall@10
     * 0.71 / 0.73 / 0.69 at sf0.001/0.01/0.1 (old 16/4: 0.65/0.56/0.58). */
@@ -109,7 +109,6 @@ object SimQueries {
 
     QueryDef("sim_topk_brute",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.bruteTopKCached(Tables.embeddings(s, d), col("vec_id") < 10,
           K, predTag = "vec_id<10")
       },
@@ -127,7 +126,6 @@ object SimQueries {
     // audit TRUE.
     QueryDef("sim_topk_mips",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.topKMips(Tables.embeddings(s, d), col("vec_id") < 10, K)
       },
       Some(SimOps.topKMipsSql("embeddings", QueryPredSql, K)),
@@ -135,7 +133,6 @@ object SimQueries {
 
     QueryDef("sim_topk_lsh",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.topKLshMulti(Tables.embeddings(s, d), col("vec_id") < 10, K, LshTabs)
       },
       Some(SimOps.topKLshMultiSql("embeddings", QueryPredSql, K, LshTabs)),
@@ -143,7 +140,6 @@ object SimQueries {
 
     QueryDef("sim_topk_ivf",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.topKIvf(Tables.embeddings(s, d), col("vec_id") < 10, K,
           c = Cells, nprobe = NProbe, trainRounds = IvfTrainRounds,
           dim = Dim)
@@ -163,7 +159,6 @@ object SimQueries {
     // reconstruction-error audit in order-free integer micro-units.
     QueryDef("sim_quantize_pq",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.quantizePq(Tables.embeddings(s, d), m = 8, k = 16, dim = 64)
       },
       Some(SimOps.quantizePqSql("embeddings", m = 8, k = 16, dim = 64)),
@@ -175,7 +170,6 @@ object SimQueries {
     // even though the per-method results themselves stay deterministic.
     QueryDef("sim_recall_audit",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.recallAudit(Tables.embeddings(s, d), col("vec_id") < 10, K,
           LshTabs, Cells, NProbe, PqM, PqK, Dim, PqShortlist,
           LshFloor, IvfFloor, PqFloor, IvfPqFloor,
@@ -206,7 +200,6 @@ object SimQueries {
     // slim rows — never corpus².
     QueryDef("sim_topk_graph",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.topKGraphBeam(Tables.embeddings(s, d), col("vec_id") < 10,
           K, SimOps.knnEdgesCached(Tables.embeddings(s, d), GraphDegree,
             LshTabs),
@@ -228,7 +221,6 @@ object SimQueries {
     // CTEs.
     QueryDef("sim_topk_hnsw",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.topKHnsw(Tables.embeddings(s, d), col("vec_id") < 10,
           K, SimOps.knnEdgesCached(Tables.embeddings(s, d), GraphDegree,
             LshTabs),
@@ -244,7 +236,6 @@ object SimQueries {
     // cosine re-rank, same output contract as the other top-k methods.
     QueryDef("sim_topk_pq",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.topKPqAdc(Tables.embeddings(s, d), col("vec_id") < 10, K,
           PqM, PqK, Dim, PqShortlist)
       },
@@ -258,7 +249,6 @@ object SimQueries {
     // cosine re-rank — FAISS's SQ8 flat index re-expressed relationally.
     QueryDef("sim_topk_int8",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.topKInt8(Tables.embeddings(s, d), col("vec_id") < 10, K,
           PqShortlist)
       },
@@ -301,7 +291,6 @@ object SimQueries {
     // scales with bucket occupancy, not corpus².
     QueryDef("sim_knn_graph",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK, LshTabs)
       },
       Some(SimOps.topKLshMultiSql("embeddings", "TRUE", KnnK, LshTabs)),
@@ -320,7 +309,6 @@ object SimQueries {
     // on both engines over the identical LSH edge set.
     QueryDef("graph_link_predict",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val e = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK, LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
         val indeg = e.groupBy(col("dst")).agg(count(lit(1)).as("__in"))
@@ -369,7 +357,6 @@ object SimQueries {
     // k-NN graph; band tested on the engine-exact quantized cosine.
     QueryDef("sim_hard_negatives",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.hardNegatives(Tables.embeddings(s, d), lit(true),
           HnLo, HnHi, HnN, LshTabs)
       },
@@ -384,7 +371,6 @@ object SimQueries {
     // float columns; the oracle replays the rounds as chained CTEs.
     QueryDef("graph_pagerank",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -406,7 +392,6 @@ object SimQueries {
     // identical rounds.
     QueryDef("graph_louvain",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -428,7 +413,6 @@ object SimQueries {
     // generation is O(20^2) on broadcast frames.
     QueryDef("sim_mmr_rerank",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.mmrRerank(Tables.embeddings(s, d), queryId = 0L)
       },
       Some(SimOps.mmrRerankSql("embeddings", queryId = 0L)),
@@ -442,7 +426,6 @@ object SimQueries {
     // unrolled-CTE oracle as graph_pagerank.
     QueryDef("graph_ppr",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -462,7 +445,6 @@ object SimQueries {
     // mirrored by the unrolled oracle.
     QueryDef("graph_label_prop",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -485,7 +467,6 @@ object SimQueries {
     // identical rounds as chained CTEs.
     QueryDef("graph_kcore",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -508,7 +489,6 @@ object SimQueries {
     // two chained recursive CTEs with the same tie order.
     QueryDef("graph_diameter",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -540,7 +520,6 @@ object SimQueries {
     // the -1 sentinel; the spec pins resolved=true on the gate corpus.
     QueryDef("graph_diameter_exact",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -574,7 +553,6 @@ object SimQueries {
     // first resolved round.
     QueryDef("graph_diameter_tk",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val nodes = docs.select(col("doc_id").as("node_id"))
         val edges = docs.filter(col("doc_id") >= 1)
@@ -604,7 +582,6 @@ object SimQueries {
     // nondegenerate — the gate's cost is pure flat BSP rounds.
     QueryDef("graph_diameter_capped",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val nodes = docs.select(col("doc_id").as("node_id"))
         val edges = docs.filter(col("doc_id") >= 1)
@@ -625,7 +602,6 @@ object SimQueries {
     // max, sentinel everywhere else.
     QueryDef("graph_diameter_tk_capped",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val nodes = docs.select(col("doc_id").as("node_id"))
         val edges = docs.filter(col("doc_id") >= 1)
@@ -652,7 +628,6 @@ object SimQueries {
     // (seed, node, dist).
     QueryDef("graph_harmonic",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -677,7 +652,6 @@ object SimQueries {
     // unrolls the identical rounds as MATERIALIZED CTEs.
     QueryDef("graph_ktruss",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -697,7 +671,6 @@ object SimQueries {
     // micro-units via floor division.
     QueryDef("graph_triangles",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -718,7 +691,6 @@ object SimQueries {
     // the identical masses and floor divisions.
     QueryDef("graph_modularity",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -791,7 +763,6 @@ object SimQueries {
     // min(dist) equals the first-reached layer.
     QueryDef("graph_bfs_layers",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -807,7 +778,7 @@ object SimQueries {
 
     // Pivot-sampled betweenness centrality (Brandes forward σ-BFS +
     // level-descending dependency accumulation, 16 hash-chosen pivots —
-    // the BcScale-measured sweet spot: 4× the pivots of the round-11
+    // the sweet spot PLANS.md's BcScale drive measured: 4× the pivots of the round-11
     // gate for ~1.1× the wall time, since per-round BSP overhead
     // dominates until k·frontier saturates the executor, and the
     // Brandes–Pich estimator's variance drops with k):
@@ -819,7 +790,6 @@ object SimQueries {
     // forward/backward CTE replay bit-for-bit.
     QueryDef("graph_betweenness",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -842,7 +812,6 @@ object SimQueries {
     // identically; every relaxation is then exact BIGINT min-folding.
     QueryDef("graph_sssp",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"),
@@ -872,7 +841,6 @@ object SimQueries {
     // the probe costs one pass over the edge list, never the corpus².
     QueryDef("sim_label_probe",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val lbl = emb.select(col("vec_id"), col("label"))
         val votes = SimOps.knnEdgesCached(emb, KnnK, LshTabs)
@@ -930,7 +898,6 @@ object SimQueries {
     // edge list, never corpus².
     QueryDef("sim_hubness",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val indeg = SimOps.knnEdgesCached(emb, KnnK, LshTabs)
           .groupBy(col("neighbor_id").as("node_id"))
@@ -963,7 +930,6 @@ object SimQueries {
     // starts from.
     QueryDef("graph_cc",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val pairs = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("doc_a"), col("neighbor_id").as("doc_b"))
@@ -998,7 +964,6 @@ object SimQueries {
     // (hkey < cutoff) before the anti-join, same order, same contract.
     QueryDef("graph_negative_samples",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val edges = SimOps.knnEdgesCached(Tables.embeddings(s, d), KnnK,
             LshTabs)
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -1045,7 +1010,6 @@ object SimQueries {
     // engine-exact; the oracle replays the identical rounds as CTEs.
     QueryDef("sim_kmeans",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         SimOps.kmeans(Tables.embeddings(s, d), k = KmK,
           rounds = KmRounds, dim = Dim)
       },

@@ -146,7 +146,6 @@ object SketchQueries {
     // sketch's own function (same LCG coefficients).
     QueryDef("text_cms_freq",
       (s, d) => {
-        graft.catalyst.GraftFunctions.register(s)
         val terms = Tables.documents(s, d)
           .select(explode(TextOps.tokens(col("text"))).as("term"))
           .select(col("term"), TextOps.hash64(col("term")).as("h"))
@@ -189,7 +188,6 @@ object SketchQueries {
       (s, d) => {
         // minhash_sketch = MinHashSketchAgg surfaced as a registered UDAF:
         // plain relational groupBy, no typed-encoder overhead.
-        graft.catalyst.GraftFunctions.register(s)
         // (source, shingle_hash) inverted index — hash post-explode, codegen.
         val inv = Tables.documents(s, d)
           .withColumn("__toks", TextOps.tokens(col("text")))
@@ -348,7 +346,7 @@ object SketchQueries {
         // the full bench session (+1.4–1.6 s across three runs; the
         // column-pruned globalRow copy recomputes a CHEAPER perSource
         // than the checkpoint materializes, and checkpoint cost tracks
-        // session block pressure — the r14 MatExp story).
+        // session block pressure — OPTIMIZATION_r14.md).
         val perSource = sh.groupBy(col("source")).agg(
           KmvSketchAgg.kmvSketch(col("h")).as("__sk"),
           countDistinct(col("h")).as("exact_distinct"))

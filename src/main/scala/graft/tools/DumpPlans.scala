@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Catalog
 
 /** Writes PLANS.md: `explain("formatted")` snapshots of the
@@ -73,13 +71,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.catalyst.GraftFunctions.register(spark)
+    val spark = graft.GraftSession(4)
     val byName = Catalog.all.map(q => q.name -> q).toMap
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the scale-critical queries\n\n")

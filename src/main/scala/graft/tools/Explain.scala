@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Catalog
 
 /** Plan inspection for any catalog query:
@@ -13,14 +11,7 @@ import graft.Catalog
   * before the plan prints for those. No args lists the catalog. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.catalyst.GraftFunctions.register(spark)
+    val spark = graft.GraftSession(32)
     args.headOption match {
       case None =>
         println("EXPLAIN usage: Explain <queryName> [sfDir]; catalog:")

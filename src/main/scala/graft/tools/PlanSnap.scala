@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.Catalog
@@ -20,14 +19,7 @@ object PlanSnap {
     val (tag, suffix) = (args(0), args(1))
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.catalyst.GraftFunctions.register(spark)
+    val spark = graft.GraftSession(32)
     // Mirror Bench's shared-artifact caches so the captured plans are the
     // bench's warm-consume shapes (without these, knnEdgesCached & co.
     // plan their full inline builds — a shape the timed pass never runs).

@@ -2,8 +2,6 @@ package graft.tools
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Catalog
 
 /** Warm per-query profiler: two timed passes over every catalog query at
@@ -15,13 +13,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only: Option[Set[String]] =
       args.lift(1).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(32)
     // Artifact caches default ON (the Bench defaults) so an isolated
     // Profile run measures the same amortized shared-artifact reality
     // the bench does — an unset dir made graph_diameter/graph_harmonic

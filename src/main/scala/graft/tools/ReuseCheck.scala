@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Catalog
 
 /** Post-execution plan inspector: materializes a catalog query and prints
@@ -11,14 +9,7 @@ import graft.Catalog
   * `runMain graft.tools.ReuseCheck <queryName> [sfDir]`. */
 object ReuseCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.catalyst.GraftFunctions.register(spark)
+    val spark = graft.GraftSession(32)
     // Ground truth beyond plan strings: count executed stages and shuffle
     // bytes written — a reused exchange materializes its stage ONCE.
     val stages = new java.util.concurrent.atomic.AtomicInteger

@@ -1,16 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke: run SparkEntry.entry, require rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(4)
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     println(s"SMOKE entry rows=$n schema=${df.schema.map(_.name).mkString(",")}")

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,12 +20,7 @@ object StreamDemo {
     s"""{"systemTime":"$systemTime","value":$value,"trend":"flat"}"""
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(4)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

@@ -199,7 +199,6 @@ class ClinicalSpec extends SparkSpec {
 
   test("graph_negative_samples never emits a real edge; ranks are 1..5 per query") {
     val dir = "/root/testdata/sf0.001"
-    graft.catalyst.GraftFunctions.register(spark)
     val negs = run("graph_negative_samples", dir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     val edges = graft.ops.SimOps.knnEdgesCached(

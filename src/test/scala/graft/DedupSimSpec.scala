@@ -103,7 +103,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("jaro_winkler: textbook fixtures at exact doubles, both eval paths") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     // Expected values are DuckDB's jaro_winkler_similarity outputs,
     // exact to the last ulp (the oracle twin must hash-match).
     val cases = Seq(
@@ -342,7 +341,6 @@ class DedupSimSpec extends SparkSpec {
       GraphOps.kCore(nodes, edges, k = 0, rounds = 8))
     // Convergence on the gate corpus: one MORE round changes nothing,
     // so the gated rounds=8 output is the true k-core, not a truncation.
-    graft.catalyst.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
     val knn = graft.ops.SimOps.knnEdgesCached(
         graft.Tables.embeddings(spark, d),
@@ -387,7 +385,6 @@ class DedupSimSpec extends SparkSpec {
     intercept[IllegalArgumentException](GraphOps.kTruss(edges, 2, 6))
     intercept[IllegalArgumentException](GraphOps.kTruss(edges, 4, 0))
     // Convergence on the gate corpus within the gated 6 rounds.
-    graft.catalyst.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
     val knn = graft.ops.SimOps.knnEdgesCached(
         graft.Tables.embeddings(spark, d),
@@ -512,7 +509,6 @@ class DedupSimSpec extends SparkSpec {
     // Gate corpus: resolved within fringeLevels = 3, every BFS depth
     // strictly under the 12 cap (the cap never truncates an
     // eccentricity), and the exact value dominates the LB gate.
-    graft.catalyst.GraftFunctions.register(spark)
     val d0 = "/root/testdata/sf0.001"
     val g = Catalog.queries("graph_diameter_exact")(spark, d0).collect()(0)
     assert(g.getBoolean(8), "gate corpus must resolve")
@@ -612,7 +608,6 @@ class DedupSimSpec extends SparkSpec {
     // Gate corpus (the 8-ary doc-hierarchy tree): exact diameter in
     // THREE single-source BFS — the cost profile that makes this the
     // scale path on hierarchy/power-law graphs.
-    graft.catalyst.GraftFunctions.register(spark)
     val g = Catalog.queries("graph_diameter_tk")(
       spark, "/root/testdata/sf0.001").collect()(0)
     assert(g.getBoolean(4) && g.getLong(5) === 6L && g.getLong(1) === 3L)
@@ -1111,7 +1106,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("sim_hubness: histogram masses conserve — n_nodes sums to the " +
     "corpus size and in-degree mass sums to the k-NN edge count") {
-    graft.catalyst.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
     val rows = Catalog.queries("sim_hubness")(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -1159,7 +1153,6 @@ class DedupSimSpec extends SparkSpec {
     "once, re-reads it bit-equal; in-memory or untagged calls " +
     "recompute without touching the cache") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val vecs = (0 until 10).map { i =>
       val th = 2.0 * math.Pi * i / 40.0
       (i.toLong, Array(math.cos(th).toFloat, math.sin(th).toFloat))
@@ -1317,7 +1310,6 @@ class DedupSimSpec extends SparkSpec {
     "invalid knobs reject") {
     import spark.implicits._
     import graft.ops.SimOps
-    graft.catalyst.GraftFunctions.register(spark)
     // 12 unit vectors on a circle: cosine falls with angular distance,
     // so vec i's true nearest neighbors are i±1, i±2, … A chain i—i+1
     // is then a perfect navigable graph.
@@ -1360,7 +1352,6 @@ class DedupSimSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.SimOps
     import graft.queries.SimQueries._
-    graft.catalyst.GraftFunctions.register(spark)
     val n = 12
     val vecs = (0 until n).map { i =>
       val th = 2.0 * math.Pi * i / (4.0 * n)
@@ -1421,7 +1412,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("cosineLshPairs: subset of brute pairs, identical vectors always pair, deterministic") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val vecs = Seq(
       (0L, Array(1f, 2f, 3f, 4f)),
       (1L, Array(1f, 2f, 3f, 4f)),      // identical to 0
@@ -1473,7 +1463,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("semDedup: exact duplicates keep one survivor; orthogonal vectors survive") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     // Identical vectors quantize to identical micro-vectors, so they land
     // in the SAME cell whatever the trained centroids are — within-cell
     // pairwise must then drop all but the lowest id. The orthogonal
@@ -1535,7 +1524,6 @@ class DedupSimSpec extends SparkSpec {
   }
 
   test("array_dot matches HOF semantics: NULL on length mismatch or null element") {
-    graft.catalyst.GraftFunctions.register(spark)
     // Interpreted path (constant-folded literals).
     val lit = spark.sql("""SELECT
       array_dot(array(1D,2D), array(3D,4D)) AS ok,
@@ -1598,7 +1586,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("IVF top-k finds the identical-vector neighbor and is rerun-deterministic") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     // 40 vectors in 4 orthogonal directions; vec 1 duplicates vec 0, so they
     // quantize to the same cell and IVF must rank vec 1 first for query 0.
     val vecs = (0L until 40L).map { i =>
@@ -1618,7 +1605,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("multi-table LSH top-k: scores are exact on candidates, recall audited") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val vecs = (0L until 60L).map { i =>
       (i, Array.tabulate(4)(j => ((i * 7 + j * 13) % 19).toFloat - 9f))
     }.toDF("vec_id", "embedding")
@@ -1647,7 +1633,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("IVF-PQ with all cells probed and a full-corpus shortlist equals brute force") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val vecs = (0L until 60L).map { i =>
       (i, Array.tabulate(4)(j => ((i * 7 + j * 13) % 19).toFloat - 9f))
     }.toDF("vec_id", "embedding")
@@ -1665,7 +1650,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("PQ-ADC top-k with a full-corpus shortlist equals brute force") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val vecs = (0L until 60L).map { i =>
       (i, Array.tabulate(4)(j => ((i * 7 + j * 13) % 19).toFloat - 9f))
     }.toDF("vec_id", "embedding")
@@ -1683,7 +1667,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("SQ8 top-k with a full-corpus shortlist equals brute force") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     // Same corpus contract as every top-k op: no zero vectors (the shared
     // exact-cosine re-rank divides by the norm); the quantizer's own
     // zero-scale floor is covered by quantizeInt8's gate.
@@ -1750,7 +1733,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("pq_encode expression matches the composed-builtin tree bit-for-bit") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val (m, dim) = (4, 8)
     val d = dim / m
     // Float corpus incl. a zero vector and an exact centroid copy; the
@@ -1822,7 +1804,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("indexIncremental: batch-only output, codebook frozen from the old corpus") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val (c, m, k, dim) = (4, 2, 4, 8)
     val vecs = (0L until 30L).map { i =>
       (i, Array.tabulate(dim)(j => (((i * 11 + j * 5) % 17).toFloat - 8f) / 4f))
@@ -2009,7 +1990,6 @@ class DedupSimSpec extends SparkSpec {
     assert(merged.toSeq === bits.toSeq)
     // the distributed UDAF agrees with the local fold regardless of partitioning
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val viaUdaf = hashes.toDF("h").repartition(7)
       .agg(expr("bloom_bits(h)")).collect()(0).getSeq[Long](0)
     assert(viaUdaf.toSeq === bits.toSeq)
@@ -2174,7 +2154,6 @@ class DedupSimSpec extends SparkSpec {
   test("CmsAgg: cells equal the driver-replayed collision sums; merge is partition-invariant; never under-counts") {
     import spark.implicits._
     import graft.catalyst.CmsAgg
-    graft.catalyst.GraftFunctions.register(spark)
     // Term stream with skew: term_i appears i+1 times, i in 0..49.
     val occurrences = (0 until 50).flatMap(i => Seq.fill(i + 1)(s"term$i"))
     def sketchOf(parts: Int): Array[Long] = {
@@ -2294,7 +2273,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("topKMips ranks by inner product and the augmented-cosine reduction agrees") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     // magnitude matters: v3 points the same way as the query but is LONGER
     // than the more-aligned-but-short v2 — cosine would pick v2, MIPS v3.
     val vecs = Seq(
@@ -2313,7 +2291,6 @@ class DedupSimSpec extends SparkSpec {
 
   test("topKMips equals a direct inner-product ranking on real embeddings") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val out = SimOps.topKMips(emb, col("vec_id") < 5, k = 10)
     assert(out.count() == 50)
@@ -2431,7 +2408,6 @@ class DedupSimSpec extends SparkSpec {
       "duplicate of the first pick") {
     import spark.implicits._
     import graft.ops.SimOps
-    graft.catalyst.GraftFunctions.register(spark)
     // q = [1,0,0,0]; 1 and 2 are the SAME direction (sim = 1, rel
     // 0.9939 each); 3 is diverse (rel 0.7071, sim-to-1 0.6247).
     // Greedy: pick 1 (tie -> smaller id); then 3 (0.5*0.7071 -
@@ -2454,7 +2430,6 @@ class DedupSimSpec extends SparkSpec {
       "pick_order sequence)") {
     import spark.implicits._
     import graft.ops.SimOps
-    graft.catalyst.GraftFunctions.register(spark)
     // Deterministic pseudo-random 16-vector fixture (id 0 is the query).
     def vec(seed: Long): Array[Float] =
       Array.tabulate(8)(i => (((seed * 2654435761L + i * 40503L) % 1000L)
@@ -2795,7 +2770,6 @@ class DedupSimSpec extends SparkSpec {
     "tree it replaced — values, null vector, null element, and " +
     "length-mismatch corners") {
     import spark.implicits._
-    graft.catalyst.GraftFunctions.register(spark)
     val cents = Seq(Seq(1L, 2L, 3L), Seq(-4L, 0L, 7L), Seq(1L, 2L))
     val vm = Seq(
       (1L, Seq[java.lang.Long](5L, -1L, 2L)), // plain values

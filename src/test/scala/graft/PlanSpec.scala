@@ -51,7 +51,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("brute-force similarity broadcasts the query side") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("sim_topk_brute")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"query side should broadcast:\n$p")
@@ -59,14 +58,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("LSH embedding dedup joins by bucket — never a nested loop over n² pairs") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("dedup_embedding_lsh")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"n² nested loop in dedup path:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in dedup path:\n$p")
   }
 
   test("multi-table LSH top-k: candidates come from a bucket equi-join, not a loop") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("sim_topk_lsh")
     assert(!p.contains("CartesianProduct"), s"cartesian in LSH top-k:\n$p")
     // The (tbl, bucket) candidate join must be an equi-join (hash or
@@ -75,7 +72,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("triangle counting is pure equi-joins over the oriented edge cache") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("graph_triangles")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"triangle join must stay equi (wedge + close), never a loop:\n$p")
@@ -139,14 +135,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("RAG prep composition is one narrow pass — zero exchanges") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("pipeline_rag_prep")
     assert(!p.contains("Exchange"),
       s"chunk->embed->quantize->bucket must not shuffle:\n$p")
   }
 
   test("IVF cell assignment is a narrow map; candidate join is hash, not n²") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("sim_topk_ivf")
     // Trained-quantizer path: the k-means train runs as separate driver
     // jobs (TakeOrderedAndProject seed + k·dim-row update shuffles);
@@ -161,7 +155,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF-PQ code index joins probes by cell; exactly one pq_encode per side") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("sim_topk_ivfpq")
     assert(!p.contains("CartesianProduct"), s"unexpected cartesian:\n$p")
     assert(p.contains("BroadcastHashJoin") || p.contains("ShuffledHashJoin"),
@@ -437,7 +430,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("MIPS scoring broadcasts the query side like the brute baseline") {
-    graft.catalyst.GraftFunctions.register(spark)
     val p = planOf("sim_topk_mips")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"queries must broadcast onto the corpus scan:\n$p")
@@ -452,6 +444,9 @@ class PlanSpec extends SparkSpec {
     val s = phys.toString
     assert(s.contains("TopKPerKeyFinal") && s.contains("TopKPerKeyPartial"),
       s"rewrite did not fire:\n$s")
+    // `!` marks a node whose references are missing from its input: the
+    // rank column must be declared as produced, not read from the child.
+    assert(!s.contains("!TopKPerKey"), s"rank column reported missing:\n$s")
     // partial BELOW the exchange (bounds the shuffle), final above it
     assert("(?s)TopKPerKeyFinal.*Exchange.*TopKPerKeyPartial".r
       .findFirstIn(s).isDefined, s"partial must sit under the exchange:\n$s")
@@ -480,6 +475,21 @@ class PlanSpec extends SparkSpec {
         .toSet
       assert(got === want)
     } finally spark.conf.unset("spark.graft.topk.rewrite")
+  }
+
+  test("a catalog query installs Graft's functions and rules itself: its " +
+    "rows and plan do not depend on what ran earlier in the session") {
+    // Each newSession() starts bare: built-in functions only, no extra
+    // optimizer rules or strategies — a session built outside this repo.
+    val coreset = Catalog.queries("sim_coreset_farthest")
+    val first = coreset(spark.newSession(), d).collect().toSet
+    assert(first.nonEmpty)
+    assert(first === coreset(spark, d).collect().toSet)
+    val modd = Catalog.queries("ref_modd")(spark.newSession(), d)
+      .queryExecution.executedPlan.toString
+    assert(modd.contains("TopKPerKeyPartial"), s"rewrite did not fire:\n$modd")
+    assert(!modd.contains("WindowGroupLimit") && !modd.contains("!TopKPerKey"),
+      s"sort-based group limit or missing rank input:\n$modd")
   }
 
   test("top-k partial degrades to pass-through past the key-cardinality cap, results unchanged") {
@@ -601,7 +611,6 @@ class PlanSpec extends SparkSpec {
 
   test("graph-ANN walks: the final rank plans directly over the layer " +
     "union — no RDD round-trip above it (round-11)") {
-    graft.catalyst.GraftFunctions.register(spark)
     for (q <- Seq("sim_topk_graph", "sim_topk_hnsw")) {
       val p = planOf(q)
       // The checkpointed layer LEAVES are ExistingRDD scans by design;
@@ -625,7 +634,6 @@ class PlanSpec extends SparkSpec {
   test("WordPiece apply: ONE broadcast vocab row onto the distinct-word " +
     "fold, the word->tokens join broadcasts, the vocab rank window " +
     "rewrites to the bounded heap — and no UDF anywhere") {
-    graft.catalyst.GraftFunctions.register(spark)
     for (q <- Seq("text_wordpiece", "text_viterbi_segment")) {
       val p = planOf(q)
       // the trained-vocab single row reaches the fold as a broadcast
@@ -651,7 +659,6 @@ class PlanSpec extends SparkSpec {
 
   test("weighted SSSP and betweenness: frontier rounds are hash " +
     "equi-joins over slim rows — no cartesian, no UDF, no Window") {
-    graft.catalyst.GraftFunctions.register(spark)
     for (q <- Seq("graph_sssp", "graph_betweenness")) {
       val p = planOf(q)
       assert(!p.contains("CartesianProduct"), s"$q: cartesian:\n$p")

@@ -20,7 +20,6 @@ class PropertySpec extends SparkSpec {
   test("property: pq_encode equals the composed-builtin tree on random vectors") {
     import spark.implicits._
     import graft.ops.SimOps
-    graft.catalyst.GraftFunctions.register(spark)
     for ((m, k, dim) <- Seq((2, 3, 8), (4, 6, 16), (8, 5, 16))) {
       val d = dim / m
       val raw = (0L until 40L).map { i =>

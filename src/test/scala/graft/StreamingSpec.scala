@@ -960,7 +960,6 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StatefulOps.{CmsState, HashEvent}
     val dir = "/root/testdata/sf0.001"
-    graft.catalyst.GraftFunctions.register(spark)
     // Batch truth: the same cms_counts UDAF the gated query runs,
     // per source group.
     val batch = graft.Tables.documents(spark, dir)
