@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's parquet tables (TESTDATA.md).
   *
@@ -14,7 +16,53 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Inferred schemas by (qualified path, modification time, length, the
+    * session's parquet read settings). Bounded: at most `SchemaMemoSize`
+    * entries, least recently used out first; an entry is one StructType
+    * of the table's few columns. The catalog reads ten tables per scale
+    * directory. */
+  private val SchemaMemoSize = 64
+  private val schemas =
+    new java.util.LinkedHashMap[AnyRef, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[AnyRef, StructType]): Boolean =
+        size > SchemaMemoSize
+    }
+
+  /** `spark.read.parquet(path)`, without the schema-inference job on a
+    * repeat read: Spark reads a parquet footer in a one-task job every
+    * time it infers a schema, and every catalog query reads its tables
+    * anew. A single file's schema is inferred once per file version (one
+    * `getFileStatus` names it) and per parquet read settings, so
+    * `spark.sql.legacy.parquet.nanosAsLong` still changes what `events`
+    * infers; later reads pass it with `.schema`. A directory, or a path
+    * that does not exist, is read as is. */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val settings = spark.sessionState.conf.getAllConfs.toSeq.filter {
+          case (k, _) => k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.")
+        }.sorted
+        val key = (st.getPath.toString, st.getModificationTime, st.getLen,
+          settings)
+        schemas.synchronized(Option(schemas.get(key))) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.synchronized(schemas.put(key, df.schema))
+            df
+        }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -45,7 +93,7 @@ object Tables {
     val path = s"$dir/events.parquet"
     val legacyFlag = "spark.sql.legacy.parquet.nanosAsLong"
     val df =
-      try spark.read.parquet(path)
+      try parquet(spark, path)
       catch {
         case e: Exception if e.getMessage != null && e.getMessage.contains("NANOS") =>
           // The flag must OUTLIVE this call: parquet conversion consults
@@ -59,7 +107,7 @@ object Tables {
               s"enabling $legacyFlag for the SESSION (nanos columns " +
               "elsewhere will read as LONG)")
           spark.conf.set(legacyFlag, "true")
-          spark.read.parquet(path)
+          parquet(spark, path)
       }
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

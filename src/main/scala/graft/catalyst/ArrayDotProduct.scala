@@ -157,7 +157,8 @@ object GraftFunctions {
         org.apache.spark.sql.functions.udaf(
           new CmsAgg, org.apache.spark.sql.Encoders.scalaLong))
     // The top-k rewrite needs both its optimizer rule and its planner
-    // strategy, and the banded-join rewrite its rule. Runtime
+    // strategy, the percentile_disc and banded-join rewrites their
+    // rules. Runtime
     // `experimental` install reaches any session, including a bare one
     // built without any Graft configuration.
     if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
@@ -167,6 +168,10 @@ object GraftFunctions {
         .contains(graft.plans.TopKRewriteRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.TopKRewriteRule
+    if (!spark.experimental.extraOptimizations
+        .contains(graft.plans.PercentileDiscRewrite))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.PercentileDiscRewrite
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.BandedJoinRule))
       spark.experimental.extraOptimizations =

@@ -355,7 +355,7 @@ object SimOps {
       .orderBy(col("score").desc, col("vec_id"))
     // The band test runs on floor(score·10⁴ + 0.5) — the INTEGER inside
     // quant4 — instead of the quant4'd double. Equivalent row set for
-    // 4-dp-grid bounds (enforced below): n/10⁴ is a correctly-rounded
+    // 4-dp-grid bounds (checked below): n/10⁴ is a correctly-rounded
     // strictly-increasing map, so quant4(x) >= lo ⟺ floor(x·10⁴+0.5) >=
     // lo·10⁴, and the non-finite exclusions match (NaN/±Inf floor to
     // 0/±Long.Max under Spark's double→long floor, all outside [lo·10⁴,
@@ -368,11 +368,14 @@ object SimOps {
     val hiQ = math.floor(hi * 1e4 + 0.5).toLong
     // loQ > 0 also pins the NaN exclusion: NaN floors to 0L, which must
     // fall below the band exactly as quant4-NaN fell outside [lo, hi).
-    require(lo == loQ / 1e4 && hi == hiQ / 1e4 && loQ > 0,
-      s"hardNegatives band bounds must sit on the 4-dp grid, lo > 0 ($lo, $hi)")
+    // Bounds off the grid, or lo <= 0, test the quant4 band itself.
+    val q = floor(col("score") * lit(1e4) + lit(0.5))
+    val band =
+      if (lo == loQ / 1e4 && hi == hiQ / 1e4 && loQ > 0)
+        q >= lit(loQ) && q < lit(hiQ)
+      else quant4(col("score")) >= lit(lo) && quant4(col("score")) < lit(hi)
     lshScored(vectors, queryPred, tables)
-      .filter(floor(col("score") * lit(1e4) + lit(0.5)) >= lit(loQ) &&
-        floor(col("score") * lit(1e4) + lit(0.5)) < lit(hiQ))
+      .filter(band)
       .withColumn("cosine", quant4(col("score")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= n)
@@ -1868,6 +1871,11 @@ object SimOps {
     // query), so the audit join never needs the SortMergeJoin the planner
     // picked (each branch re-sorted + re-exchanged the persisted brute
     // relation — 4 Exchanges + 2 Sorts per method, r14 verdict #2/§3.1).
+    // Size limit: the broadcast side is nQueries × k (query_id,
+    // neighbor_id) pairs, 16 bytes each — 10 × K for the one caller
+    // (sim_recall_audit audits vec_id < 10). The hint holds only for an
+    // audit-sized query set; a queryPred that selects a corpus-scale set
+    // must drop it and let the planner sort-merge.
     def one(name: String, approx: DataFrame, floor: Double): DataFrame =
       bruteK.join(
           broadcast(approx.select(col("query_id"), col("neighbor_id"))

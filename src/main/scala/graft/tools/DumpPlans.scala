@@ -46,21 +46,22 @@ object DumpPlans {
     "text_quality_classifier" -> "linear model serving: pure narrow codegen'd map, zero exchanges",
     "graph_triangles" -> "degree-oriented triangle join: wedge + close equi-joins over the cached oriented edges (O(m^1.5) bound)",
     "text_phrase_search" -> "phrase search: broadcast phrase dim + posting-list-pruned (doc,pos+i,term) equi-joins over ONE cached tokenization",
-    "ref_anomaly_mad" -> "MAD modified z: two user-keyed percentile_disc aggs + two broadcast joins back, no full-feed window sort",
+    "ref_agp_profile" -> "AGP bands: five percentile_disc in ONE Graft kernel buffer, one hour-keyed partial+final object-hash agg",
+    "ref_anomaly_mad" -> "MAD modified z: two user-keyed median aggs on Graft's percentile_disc kernel + two broadcast joins back, no full-feed window sort",
     "ref_time_in_range" -> "duration-weighted clinical bands: ONE user exchange shared by the window sort and the roll-up",
     "ref_hypo_episodes" -> "gaps-and-islands condition runs: island id from the window's running sum, roll-up on the same partitioning",
     "q_market_basket" -> "association rules: distinct-first order-keyed pair self-join, broadcast item supports, top-k cap",
     "pipeline_train_val_split" -> "cluster-grain split: narrow bucket map over the doc-keyed cluster join + slim audit equi-joins",
     "ref_modd" -> "MODD: slot-representative window -> consecutive-day lag pairing -> integer micro-unit mean (day-grain rows after the first pass)",
     "ref_mage" -> "MAGE: three lag/lead windows share ONE user exchange; single SD branch via left-join + conditional agg",
-    "ref_winsorized_mean" -> "winsorize: user-keyed percentile pair + co-keyed join back + scalar clip, micro-unit mean",
+    "ref_winsorized_mean" -> "winsorize: user-keyed percentile pair in one kernel buffer + co-keyed join back + scalar clip, micro-unit mean",
     "ref_seasonal_residual" -> "seasonal residual: (user, hour) hash-agg baseline joined back on the same key — no feed-wide window",
     "q_asof_tolerance" -> "tolerance as-of: the union+window single-exchange zero-join plan + scalar integer-second freshness predicate",
     "q_snapshot_diff" -> "snapshot diff: full-outer equi-join over slim (id, digest) rows, scalar CASE classification",
     "dedup_prefix_filter" -> "prefix-filter exact Jaccard: rarest-first prefix inverted index -> candidate equi-join -> pair-keyed exact verify",
     "graph_bfs_layers" -> "BFS: frontier equi-join per round over repartition-once edges; layers localCheckpoint'ed (no exponential lineage)",
     "graph_negative_samples" -> "negative sampling: bounded query x corpus candidates, hash order, anti-join against edges",
-    "sim_quantile_transform" -> "quantile transform: per-dim boundary sort-agg (tiny) broadcast back onto a narrow bucket map",
+    "sim_quantile_transform" -> "quantile transform: per-dim 9-boundary kernel agg (tiny, one buffer) broadcast back onto a narrow bucket map",
     "text_token_gini" -> "token Gini: two map-side-combinable hash-aggs, integer micro-unit output",
     "stream_cdc_classify" -> "CDC changelog classify: ONE key-partitioned lag window",
     "q_profile_table" -> "one-scan column profile: multi-distinct via Expand, stack unpivot",

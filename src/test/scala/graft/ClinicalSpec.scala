@@ -167,6 +167,90 @@ class ClinicalSpec extends SparkSpec {
     assert(out.toSeq === Seq((1L, 20L, 0.0, 100.0, 95.0)))
   }
 
+  test("percentile_disc runs on Graft's kernel with the built-in's rows and schema") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.PercentileDisc
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20)
+    val specials = Seq(-0.0, 0.0, Double.NaN, -3.5, 2.25, 1e300, -1e-300)
+    var id = 0L
+    // ~10% nulls, duplicates, negatives, ±0.0 and NaN; the long column
+    // spreads past 2^53, where toDouble rounds.
+    def row(g: Long): Row = {
+      id += 1
+      val i = if (rnd.nextInt(10) == 0) null else Int.box(rnd.nextInt(41) - 20)
+      val l = if (i == null) null
+        else Long.box(i.toLong * 1000000000003L + rnd.nextInt(3))
+      val d = if (rnd.nextInt(10) == 0) null
+        else Double.box(if (rnd.nextInt(4) == 0) specials(rnd.nextInt(specials.size))
+          else (rnd.nextInt(21) - 10) / 4.0)
+      val f = if (d == null) null else Float.box(d.toFloat)
+      Row(id, g, i, l, f, d)
+    }
+    // Groups 0-9 random; 10 all-null; 11 one row; 1000 + n exactly n rows.
+    val sizes = Seq(1, 2, 3, 4, 5, 10, 11, 20, 21, 100, 101)
+    val rows = (0 until 2000).map(_ => row(rnd.nextInt(10))) ++
+      (0 until 5).map(_ => Row(-1L, 10L, null, null, null, null)) ++
+      Seq(row(11)) ++ sizes.flatMap(n => (0 until n).map(_ => row(1000L + n)))
+    val schema = StructType(Seq("id" -> LongType, "g" -> LongType,
+      "i" -> IntegerType, "l" -> LongType, "f" -> FloatType, "d" -> DoubleType)
+      .map { case (n, t) => StructField(n, t) })
+    // A bare session has no Graft rules: it runs Spark's PercentileDisc.
+    val bare = spark.newSession()
+    Seq(spark, bare).foreach(s =>
+      s.createDataFrame(s.sparkContext.parallelize(rows, 4), schema)
+        .createOrReplaceTempView("pd_in"))
+    def builtIns(df: DataFrame) = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case p: PercentileDisc => p }))
+    def kernels(df: DataFrame) = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case k: graft.catalyst.PercentileDiscAgg => k }))
+    // ±0.0 compare equal here: which one Spark returns depends on its
+    // hash table's order (pinned for the kernel below). NaN is a value.
+    def norm(df: DataFrame) = df.collect().toSeq
+      .map(_.toSeq.map {
+        case x: Double if x == 0.0 => 0.0
+        case x: Double if x.isNaN => "NaN"
+        case x => x
+      })
+      .sortBy(_.head.asInstanceOf[Long])
+    val ps = Seq(0.5, 0.05, 0.95, 0.25, 0.75, 0.0, 1.0, 0.33, 0.999)
+    def pd(p: Double, c: String, desc: Boolean, filter: Boolean) =
+      s"percentile_disc($p) WITHIN GROUP (ORDER BY $c${if (desc) " DESC" else ""})" +
+        (if (filter) " FILTER (WHERE id % 3 <> 0)" else "")
+    val sqls = (for (c <- Seq("i", "l", "f", "d"); k <- 1 to 9) yield {
+      val cols = ps.take(k).zipWithIndex.map { case (p, j) =>
+        pd(p, c, desc = (k + j) % 3 == 0, filter = (k + j) % 4 == 0) + s" AS p$j"
+      }
+      s"SELECT g, count($c) AS n, ${cols.mkString(", ")} FROM pd_in GROUP BY g"
+    }) ++ Seq(
+      // the same percentage twice, and more groups than the object hash
+      // aggregate holds before it falls back to sorting
+      s"SELECT g, ${pd(0.5, "d", false, false)} AS a, " +
+        s"${pd(0.5, "d", false, false)} AS b FROM pd_in GROUP BY g",
+      s"SELECT id % 300 AS g, ${ps.map(pd(_, "d", false, false)).mkString(", ")}" +
+        " FROM pd_in GROUP BY id % 300")
+    sqls.foreach { q =>
+      val (k, b) = (spark.sql(q), bare.sql(q))
+      assert(builtIns(k).isEmpty && kernels(k).nonEmpty, q)
+      assert(builtIns(b).nonEmpty && kernels(b).isEmpty, q)
+      assert(k.schema === b.schema, q)
+      assert(norm(k) === norm(b), q)
+    }
+    // One kernel per (child, direction, filter): the first 9-percentage
+    // query on `d` mixes 3 directions x filters into 4 kernels.
+    val ks = kernels(spark.sql(sqls(35))).distinct
+    assert(ks.size === 4 && ks.map(_.percentages.size).sum === 9)
+    // Pinned: -0.0 sorts below 0.0, so rank 1 of {-0.0, 0.0} is -0.0
+    // ascending and 0.0 descending.
+    import spark.implicits._
+    val z = Seq(-0.0, 0.0).toDF("v").agg(
+      expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY v)"),
+      expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY v DESC)")).head()
+    assert(1.0 / z.getDouble(0) === Double.NegativeInfinity)
+    assert(1.0 / z.getDouble(1) === Double.PositiveInfinity)
+  }
+
   test("q_snapshot_diff classifies every residue class correctly") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("snap").toString

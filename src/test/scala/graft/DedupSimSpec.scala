@@ -1631,6 +1631,30 @@ class DedupSimSpec extends SparkSpec {
     assert(audit("ivfpq")._1 >= 0.0 && audit("ivfpq")._1 <= audit("ivf")._1 + 1e-9)
   }
 
+  test("hard negatives: a negative or off-grid band filters on the quantized cosine") {
+    import spark.implicits._
+    val vecs = (0L until 60L).map { i =>
+      (i, Array.tabulate(4)(j => ((i * 7 + j * 13) % 19).toFloat - 9f))
+    }.toDF("vec_id", "embedding")
+    val tabs = SimOps.lshTables(tables = 4, planes = 3, dim = 4)
+    // Every LSH candidate of the 5 anchors, in the ranking order hard
+    // negatives share: a band's top-3 is the first 3 in-band candidates.
+    val all = SimOps.topKLshMulti(vecs, col("vec_id") < 5, 60, tabs)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    Seq((-0.5, 0.25), (0.00005, 0.99995)).foreach { case (lo, hi) =>
+      val expected = all.filter(t => t._4 >= lo && t._4 < hi).groupBy(_._1)
+        .toSeq.flatMap { case (q, rs) =>
+          rs.sortBy(_._2).take(3).zipWithIndex
+            .map { case (t, i) => (q, i + 1, t._3, t._4) }
+        }.sorted
+      val got = SimOps.hardNegatives(vecs, col("vec_id") < 5, lo, hi, 3, tabs)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq.sorted
+      if (lo < 0) assert(expected.exists(_._4 < 0.0), "band must reach negatives")
+      assert(expected.nonEmpty && got === expected, s"band [$lo, $hi)")
+    }
+  }
+
   test("IVF-PQ with all cells probed and a full-corpus shortlist equals brute force") {
     import spark.implicits._
     val vecs = (0L until 60L).map { i =>

@@ -492,6 +492,76 @@ class PlanSpec extends SparkSpec {
       s"sort-based group limit or missing rank input:\n$modd")
   }
 
+  test("ref_agp_profile's five percentiles plan as one kernel aggregate, " +
+    "not five percentile_disc buffers") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, PercentileDisc}
+    def aggs(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case ae: AggregateExpression => ae.aggregateFunction }))
+      .distinct
+    val agp = Catalog.all.find(_.name == "ref_agp_profile").get
+    val withKernel = aggs(agp.run(spark, d))
+    assert(withKernel.count(_.isInstanceOf[graft.catalyst.PercentileDiscAgg]) === 1,
+      withKernel)
+    assert(!withKernel.exists(_.isInstanceOf[PercentileDisc]), withKernel)
+    // The query body alone in a bare session: Spark's own plan.
+    val builtIn = aggs(agp.body(spark.newSession(), d))
+    assert(builtIn.count(_.isInstanceOf[PercentileDisc]) === 5, builtIn)
+  }
+
+  test("a repeat read of an unchanged parquet file launches no Spark job; " +
+    "a file rewritten in place is read with its new schema") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    // Jobs started under a fresh group; listener events arrive in order,
+    // so once a marker job started after them is seen, they all are.
+    def jobsOf[T](body: => T): (T, Int) = {
+      val g = java.util.UUID.randomUUID.toString
+      sc.setJobGroup(g, "schema memo")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(g + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30000000000L
+      while (!jobs.containsKey(g + "-marker") && System.nanoTime < deadline)
+        Thread.sleep(10)
+      assert(jobs.containsKey(g + "-marker"), "marker job never reached the listener")
+      (out, Option(jobs.get(g)).map(_.intValue).getOrElse(0))
+    }
+    val dir = Files.createTempDirectory("memo").toString
+    // A single-file table, as the catalog reads (TESTDATA.md).
+    def writeTable(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = Files.createTempDirectory("memo-src").toFile
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.listFiles().find(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, Paths.get(s"$dir/region.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    sc.addSparkListener(listener)
+    try {
+      writeTable(Seq((1L, "a")).toDF("r_regionkey", "r_name"))
+      val (first, firstJobs) = jobsOf(Tables.region(spark, dir))
+      assert(firstJobs >= 1, "a first read infers the schema in a job")
+      val (again, againJobs) = jobsOf(Tables.region(spark, dir))
+      assert(againJobs === 0)
+      assert(again.schema === first.schema)
+      assert(again.schema === spark.read.parquet(s"$dir/region.parquet").schema)
+      assert(again.collect().toSeq === first.collect().toSeq)
+      writeTable(Seq((2L, "b", 3.5)).toDF("r_regionkey", "r_name", "r_extra"))
+      val rewritten = Tables.region(spark, dir)
+      assert(rewritten.columns.toSeq === Seq("r_regionkey", "r_name", "r_extra"))
+      assert(rewritten.collect().map(r => (r.getLong(0), r.getString(1),
+        r.getDouble(2))).toSeq === Seq((2L, "b", 3.5)))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("top-k partial degrades to pass-through past the key-cardinality cap, results unchanged") {
     // maxKeysPerPartition=1: all but one key per map partition skip the
     // partial bound and ship raw — the spill-safety fallback. The final's
