@@ -37,6 +37,4 @@ object BuildLedger {
     import scala.jdk.CollectionConverters._
     entries.asScala.toSeq.drop(m)
   }
-
-  def totalSecs: Double = since(0).map(_._2).sum
 }

@@ -128,9 +128,14 @@ object GraftFunctions {
       (children: Seq[Expression]) => HtmlEntityDecode(children(0))))
 
   /** Installs Graft's functions, optimizer rules and planner strategy on
-    * a session; idempotent. The only callers are [[graft.QueryDef.run]]
-    * (the catalog boundary, so a session built outside this repo is
-    * covered before any query body runs) and [[graft.GraftSession]]. Also
+    * a session, and sets `spark.sql.streaming.checkpointFileManagerClass`
+    * to [[graft.streaming.LocalCheckpointFileManager]] unless the session
+    * already names a manager; idempotent. Its three callers are
+    * [[graft.QueryDef.run]] (the catalog boundary),
+    * [[graft.streaming.EgvStreams.parseEgvs]] (the stream boundary: every
+    * EGV topology starts with that decode) and [[graft.GraftSession]]. The
+    * two boundaries cover a session built outside this repo before any
+    * query body runs or any stream starts. Also
     * registers the `minhash_sketch` UDAF — the typed [[MinHashSketchAgg]]
     * surfaced to SQL/DataFrame groupBy, which avoids the tuple-encoder
     * overhead of the groupByKey path. */
@@ -176,5 +181,6 @@ object GraftFunctions {
         .contains(graft.plans.BandedJoinRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.BandedJoinRule
+    graft.streaming.LocalCheckpointFileManager.install(spark)
   }
 }

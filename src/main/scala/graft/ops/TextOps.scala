@@ -2506,18 +2506,6 @@ object TextOps {
         concat(srcScheme, lit("://"), srcHost, target))
       .otherwise(lit(null))
 
-  /** SQL twin of [[resolveHref]] over expressions. */
-  def resolveHrefSql(target: String, srcScheme: String,
-                     srcHost: String): String =
-    s"""CASE WHEN regexp_matches($target, '(?i)^https?://')
-            THEN lower(regexp_extract($target, '(?i)^(https?)://', 1))
-              || '://' || regexp_replace($target, '(?i)^https?://', '')
-          WHEN starts_with($target, '//')
-            THEN $srcScheme || ':' || $target
-          WHEN starts_with($target, '/')
-            THEN $srcScheme || '://' || $srcHost || $target
-          ELSE NULL END"""
-
   /** `<url>…</url>` blocks of a sitemaps.org urlset document. */
   val SitemapUrlBlockRe = "(?is)<url>(.*?)</url>"
 

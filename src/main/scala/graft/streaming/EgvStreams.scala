@@ -27,7 +27,10 @@ object EgvStreams {
 
   /** S4/S5 — Kafka source (ConsumerDexcom.java:23-36,
     * StreamsFilterEgvs.java:27): subscribe from earliest; payload parsed
-    * off the `value` column by [[parseEgvs]]. */
+    * off the `value` column by [[parseEgvs]]. This and [[kafkaSink]] are
+    * the production topic boundary. Nothing here calls them, because no
+    * Kafka connector jar exists offline; they are kept so a deployment
+    * that ships the connector wires the reference's topics unchanged. */
   def kafkaSource(spark: SparkSession, bootstrap: String, topic: String,
                   startingOffsets: String = "earliest"): DataStreamReader =
     spark.readStream.format("kafka")
@@ -37,14 +40,20 @@ object EgvStreams {
 
   /** JSON value column → typed EGV columns (P4 decode,
     * ConsumerDexcom.java:38-45). Works on batch and streaming frames:
-    * input needs `key: binary/string`, `value: binary/string`. */
-  def parseEgvs(kafkaFrame: DataFrame): DataFrame =
+    * input needs `key: binary/string`, `value: binary/string`. Every EGV
+    * topology starts here, so this is the stream boundary: it installs
+    * Graft's session contract ([[graft.catalyst.GraftFunctions.register]])
+    * on the frame's session, and a stream started from it commits its
+    * logs through [[LocalCheckpointFileManager]]. */
+  def parseEgvs(kafkaFrame: DataFrame): DataFrame = {
+    graft.catalyst.GraftFunctions.register(kafkaFrame.sparkSession)
     kafkaFrame
       .select(col("key").cast("string").as("key"),
         from_json(col("value").cast("string"), Schemas.egv).as("egv"),
         col("timestamp"))
       .select(col("key"), col("timestamp"), col("egv.*"))
       .withColumn("systemTs", to_timestamp(col("systemTime")))
+  }
 
   /** The reference's producer delivery knobs (ProducerDexcom.java:66-89):
     * idempotent producer, acks=all, snappy, linger 20 ms, 32 KB batches.
@@ -59,7 +68,9 @@ object EgvStreams {
     "kafka.batch.size" -> "32768")
 
   /** S3/S7 — Kafka sink with the reference's delivery knobs
-    * ([[kafkaProducerOptions]]). `payload` rows are serialized to JSON. */
+    * ([[kafkaProducerOptions]]). `payload` rows are serialized to JSON.
+    * The production topic boundary, kept though no Kafka connector jar
+    * exists offline (see [[kafkaSource]]). */
   def kafkaSink[T](ds: Dataset[T], bootstrap: String, topic: String,
                    checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
     ds.toDF()

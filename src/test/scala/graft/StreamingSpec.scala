@@ -1,14 +1,20 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.Schemas
 import graft.ops.EgvOps
-import graft.streaming.{EgvStreams, IdempotentBulkSink, InMemoryBulkClient, StatefulOps}
+import graft.streaming.{EgvStreams, IdempotentBulkSink, InMemoryBulkClient,
+  LocalCheckpointFileManager, StatefulOps}
 
 /** End-to-end streaming tests: MemoryStream in, memory/foreachBatch sink
   * out — the Spark analog of the reference's TopologyTestDriver pipe-in /
@@ -112,48 +118,292 @@ class StreamingSpec extends SparkSpec {
       .select("range_id").as[Int].collect().sorted.toSeq === Seq(1, 2))
   }
 
+  /** Three micro-batches of EGVs for the checkpointed lookup stream. */
+  private val lookupBatches = Seq(
+    Seq(KafkaRec("robert", egvJson(75, "2020-11-02T02:00:00"), new Timestamp(0)),
+      KafkaRec("robert", egvJson(100, "2020-11-02T12:00:00"), new Timestamp(1))),
+    Seq(KafkaRec("robert", egvJson(265, "2020-11-02T19:00:00"), new Timestamp(2)),
+      KafkaRec("ana", egvJson(100, "2020-11-02T19:00:00"), new Timestamp(3))),
+    Seq(KafkaRec("ana", egvJson(150, "2020-11-02T23:30:00"), new Timestamp(4))))
+
+  /** Starts the categorize-lookup topology from `in` into the idempotent
+    * in-memory bulk sink, checkpointed at `ckpt`. */
+  private def startLookupSink(in: MemoryStream[KafkaRec], ckpt: String) =
+    EgvStreams.categorizeLookupTopology(EgvStreams.parseEgvs(in.toDF()), fixtureRangesDf)
+      .writeStream
+      .foreachBatch(IdempotentBulkSink.writeBatch(
+        InMemoryBulkClient, Seq("key", "systemTime")) _)
+      .option("checkpointLocation", ckpt)
+      .start()
+
+  private def newCheckpoint(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  private def storeSnapshot(): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    InMemoryBulkClient.store.asScala.toMap
+  }
+
+  /** The sink's store after every lookup batch ran through one stream. */
+  private def uninterruptedLookup(): Map[String, String] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    InMemoryBulkClient.store.clear()
+    val in = MemoryStream[KafkaRec]
+    val q = startLookupSink(in, newCheckpoint("graft-lookup-ckpt"))
+    lookupBatches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    q.stop()
+    storeSnapshot()
+  }
+
+  /** Names in the checkpoint's `log` directory. */
+  private def logFiles(ckpt: String, log: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(Paths.get(ckpt, log)).iterator.asScala.map(_.getFileName.toString).toSeq.sorted
+  }
+
   test("categorize-lookup into the idempotent sink restarts from its checkpoint " +
     "with the output of an uninterrupted run") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
-      Seq(KafkaRec("robert", egvJson(75, "2020-11-02T02:00:00"), new Timestamp(0)),
-        KafkaRec("robert", egvJson(100, "2020-11-02T12:00:00"), new Timestamp(1))),
-      Seq(KafkaRec("robert", egvJson(265, "2020-11-02T19:00:00"), new Timestamp(2)),
-        KafkaRec("ana", egvJson(100, "2020-11-02T19:00:00"), new Timestamp(3))),
-      Seq(KafkaRec("ana", egvJson(150, "2020-11-02T23:30:00"), new Timestamp(4))))
     // Runs every batch through one stream; `failAt` fails that batch's
     // bulk write once, then restarts from the same checkpoint.
-    def run(failAt: Option[Int]): Map[String, String] = {
-      import scala.jdk.CollectionConverters._
+    def run(failAt: Option[Int]): (Map[String, String], String) = {
       InMemoryBulkClient.store.clear()
       val in = MemoryStream[KafkaRec]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-lookup-ckpt").toString
-      def start() = EgvStreams.categorizeLookupTopology(
-          EgvStreams.parseEgvs(in.toDF()), fixtureRangesDf)
-        .writeStream
-        .foreachBatch(IdempotentBulkSink.writeBatch(
-          InMemoryBulkClient, Seq("key", "systemTime")) _)
-        .option("checkpointLocation", ckpt)
-        .start()
-      var q = start()
-      for ((batch, i) <- batches.zipWithIndex) {
+      val ckpt = newCheckpoint("graft-lookup-ckpt")
+      var q = startLookupSink(in, ckpt)
+      for ((batch, i) <- lookupBatches.zipWithIndex) {
         if (failAt.contains(i)) InMemoryBulkClient.failNextBatches = 1
         in.addData(batch: _*)
         if (failAt.contains(i)) {
           intercept[Exception] { q.processAllAvailable() }
           q.stop()
-          q = start()
+          q = startLookupSink(in, ckpt)
         }
         q.processAllAvailable()
       }
       q.stop()
-      InMemoryBulkClient.store.asScala.toMap
+      (storeSnapshot(), ckpt)
     }
-    val uninterrupted = run(None)
-    assert(uninterrupted.size === batches.flatten.size)
-    assert(run(Some(1)) === uninterrupted)
+    val (uninterrupted, _) = run(None)
+    assert(uninterrupted.size === lookupBatches.flatten.size)
+    val (restarted, ckpt) = run(Some(1))
+    assert(restarted === uninterrupted)
     assert(InMemoryBulkClient.failNextBatches === 0)
+    // The logs went through Graft's manager: Spark's default one leaves a
+    // `.crc` sidecar next to every file it writes on a local disk.
+    for (log <- Seq("offsets", "commits")) {
+      assert(logFiles(ckpt, log).contains("2"), log)
+      assert(!logFiles(ckpt, log).exists(_.endsWith(".crc")), s"$log: ${logFiles(ckpt, log)}")
+    }
+    assert(CheckpointFileManager.create(new Path(ckpt), spark.sessionState.newHadoopConf())
+      .isInstanceOf[LocalCheckpointFileManager])
+  }
+
+  test("a crash after the sink wrote a batch but before its commit replays that batch " +
+    "under the same doc ids") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val uninterrupted = uninterruptedLookup()
+    InMemoryBulkClient.store.clear()
+    val in = MemoryStream[KafkaRec]
+    val ckpt = newCheckpoint("graft-crash-ckpt")
+    val q1 = startLookupSink(in, ckpt)
+    lookupBatches.foreach { b => in.addData(b: _*); q1.processAllAvailable() }
+    q1.stop()
+    // The crash: the last batch's output reached the sink, its commit
+    // never reached the log.
+    val last = lookupBatches.size - 1
+    Files.delete(Paths.get(ckpt, "commits", last.toString))
+    val q2 = startLookupSink(in, ckpt)
+    q2.processAllAvailable(); q2.stop()
+    assert(q2.recentProgress.exists(p =>
+      p.batchId == last && p.numInputRows == lookupBatches.last.size),
+      q2.recentProgress.map(p => (p.batchId, p.numInputRows)).mkString(", "))
+    assert(logFiles(ckpt, "commits").contains(last.toString))
+    // Each record sits under exactly one doc id, as after a run that
+    // never crashed.
+    assert(storeSnapshot() === uninterrupted)
+    assert(InMemoryBulkClient.store.size === lookupBatches.flatten.size)
+  }
+
+  test("a restart ignores stale temp files in the offset and commit logs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val uninterrupted = uninterruptedLookup()
+    InMemoryBulkClient.store.clear()
+    val in = MemoryStream[KafkaRec]
+    val ckpt = newCheckpoint("graft-stale-ckpt")
+    val q1 = startLookupSink(in, ckpt)
+    lookupBatches.init.foreach { b => in.addData(b: _*); q1.processAllAvailable() }
+    q1.stop()
+    // What a writer killed between its temp write and the link leaves:
+    // one for a batch already in the log, one for the next batch.
+    val next = lookupBatches.size - 1
+    val planted = for {
+      log <- Seq("offsets", "commits")
+      n <- Seq(next - 1, next)
+    } yield Files.writeString(Paths.get(ckpt, log, s".$n.${java.util.UUID.randomUUID}.tmp"),
+      "torn write")
+    val q2 = startLookupSink(in, ckpt)
+    in.addData(lookupBatches.last: _*)
+    q2.processAllAvailable(); q2.stop()
+    assert(storeSnapshot() === uninterrupted)
+    for (log <- Seq("offsets", "commits"))
+      assert(logFiles(ckpt, log).filterNot(_.startsWith(".")) === Seq("0", "1", "2"), log)
+    assert(planted.forall(Files.exists(_)))
+  }
+
+  test("LocalCheckpointFileManager: no-overwrite commit of an existing file fails and keeps " +
+    "its bytes, cancel leaves no file, list matches Spark's default manager") {
+    val dir = Files.createTempDirectory("graft-cfm")
+    val root = new Path(dir.toString)
+    val conf = spark.sessionState.newHadoopConf()
+    val ours = new LocalCheckpointFileManager(root, conf)
+    val sparks = new FileContextBasedCheckpointFileManager(root, conf)
+    def write(fm: CheckpointFileManager, name: String, text: String,
+              overwrite: Boolean = false): Unit = {
+      val out = fm.createAtomic(new Path(root, name), overwrite)
+      out.write(text.getBytes(UTF_8))
+      out.close()
+    }
+    def read(fm: CheckpointFileManager, name: String): String = {
+      val in = fm.open(new Path(root, name))
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }
+
+    write(ours, "0", "old")
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] { write(ours, "0", "new") }
+    assert(read(ours, "0") === "old")
+    write(ours, "1", "a")
+    write(ours, "1", "b", overwrite = true)
+    assert(read(ours, "1") === "b")
+
+    val cancelled = ours.createAtomic(new Path(root, "2"), overwriteIfPossible = false)
+    cancelled.write("partial".getBytes(UTF_8))
+    cancelled.cancel()
+    assert(!ours.exists(new Path(root, "2")))
+    assert(logFiles(dir.toString, ".") === Seq("0", "1"))
+
+    // Spark's manager writes a file and its `.crc` sidecar; each manager
+    // reads what the other wrote.
+    write(sparks, "3", "spark")
+    assert(logFiles(dir.toString, ".").contains(".3.crc"))
+    assert(read(ours, "3") === "spark")
+    write(ours, "3", "graft", overwrite = true)
+    assert(read(sparks, "3") === "graft")
+    ours.mkdirs(new Path(root, "sub/dir"))
+    write(sparks, "4", "spark")
+    Files.writeString(dir.resolve(s".5.${java.util.UUID.randomUUID}.tmp"), "stale")
+    def listed(fm: CheckpointFileManager, filter: Path => Boolean) =
+      fm.list(root, (p: Path) => filter(p)).map(s => (s.getPath.toString, s.isDirectory)).sorted.toSeq
+    for (filter <- Seq((_: Path) => true, (p: Path) => p.getName.forall(_.isDigit))) {
+      assert(listed(ours, filter) === listed(sparks, filter))
+    }
+    assert(listed(ours, _ => true).map(_._1).exists(_.startsWith("file:/")))
+    assert(ours.exists(new Path(root, "sub/dir")) && ours.isLocal)
+
+    ours.delete(new Path(root, "4"))
+    ours.delete(new Path(root, "sub"))
+    ours.delete(new Path(root, "missing"))
+    assert(!logFiles(dir.toString, ".").exists(n => n == "4" || n == ".4.crc" || n == "sub"))
+    intercept[java.io.FileNotFoundException] { ours.open(new Path(root, "missing")) }
+    intercept[java.io.FileNotFoundException] { ours.list(new Path(root, "missing")) }
+
+    // parseEgvs installs the manager on a session that never had it;
+    // an explicit setting wins.
+    val bare = spark.newSession()
+    assert(bare.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
+    EgvStreams.parseEgvs(bare.createDataFrame(Seq(("k", "{}", new Timestamp(0))))
+      .toDF("key", "value", "timestamp"))
+    assert(bare.conf.get(LocalCheckpointFileManager.ClassKey) ===
+      classOf[LocalCheckpointFileManager].getName)
+    val explicit = spark.newSession()
+    explicit.conf.set(LocalCheckpointFileManager.ClassKey,
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+    graft.catalyst.GraftFunctions.register(explicit)
+    assert(explicit.conf.get(LocalCheckpointFileManager.ClassKey) ===
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+  }
+
+  test("a checkpoint written by Spark's default manager resumes under Graft's, and back, " +
+    "with the output of an uninterrupted run") {
+    // A file stream of EGV rows, one file per batch, through the simple
+    // categorizer into the idempotent sink. Nothing in it calls
+    // `register`, so a bare session commits through Spark's manager.
+    val files = Seq(
+      Seq("""{"key":"robert","systemTime":"2020-11-02T02:00:00","value":65}""",
+        """{"key":"robert","systemTime":"2020-11-02T02:05:00","value":100}"""),
+      Seq("""{"key":"ana","systemTime":"2020-11-02T02:10:00","value":265}"""),
+      Seq("""{"key":"ana","systemTime":"2020-11-02T02:15:00","value":180}"""))
+    def addFile(src: java.nio.file.Path, i: Int): Unit = {
+      val tmp = Files.writeString(src.resolve(s".$i.json.tmp"), files(i).mkString("\n"))
+      Files.move(tmp, src.resolve(s"$i.json"))
+    }
+    def runOn(s: org.apache.spark.sql.SparkSession, src: java.nio.file.Path, ckpt: String) = {
+      val q = EgvStreams.categorizeSimpleTopology(
+          s.readStream.schema("key STRING, systemTime STRING, value INT")
+            .option("maxFilesPerTrigger", "1").json(src.toString))
+        .writeStream
+        .foreachBatch(IdempotentBulkSink.writeBatch(
+          InMemoryBulkClient, Seq("key", "systemTime")) _)
+        .option("checkpointLocation", ckpt)
+        .start()
+      q.processAllAvailable(); q.stop()
+    }
+    def crcs(ckpt: String) =
+      Seq("offsets", "commits").flatMap(logFiles(ckpt, _)).count(_.endsWith(".crc"))
+
+    InMemoryBulkClient.store.clear()
+    val full = Files.createTempDirectory("graft-compat-src")
+    files.indices.foreach(addFile(full, _))
+    runOn(spark, full, newCheckpoint("graft-compat-ckpt"))
+    val uninterrupted = storeSnapshot()
+    assert(uninterrupted.size === files.flatten.size)
+
+    val bare = spark.newSession()
+    assert(bare.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
+    for ((first, second) <- Seq(bare -> spark, spark -> bare)) {
+      InMemoryBulkClient.store.clear()
+      val src = Files.createTempDirectory("graft-compat-src")
+      val ckpt = newCheckpoint("graft-compat-ckpt")
+      addFile(src, 0); addFile(src, 1)
+      runOn(first, src, ckpt)
+      // Spark's manager leaves `.crc` sidecars next to its files, Graft's
+      // none: each side wrote the batches it ran.
+      val before = crcs(ckpt)
+      assert((before > 0) === (first eq bare))
+      addFile(src, 2)
+      runOn(second, src, ckpt)
+      assert((crcs(ckpt) > before) === (second eq bare))
+      assert(logFiles(ckpt, "commits").filterNot(_.startsWith(".")) === Seq("0", "1", "2"))
+      assert(storeSnapshot() === uninterrupted)
+    }
+  }
+
+  test("categorize-simple topology end-to-end reproduces the reference asserts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[KafkaRec]
+    val out = EgvStreams.categorizeSimpleTopology(EgvStreams.parseEgvs(in.toDF()))
+    val q = out.writeStream.format("memory").queryName("categorized_simple")
+      .outputMode("append").start()
+    // CategorizeWithSimpleRuleTest: 65 -> false, 100 -> true, 265 -> false.
+    in.addData(
+      KafkaRec("robert", egvJson(65, "2020-11-02T02:00:00"), Timestamp.valueOf("2020-11-02 02:00:00")),
+      KafkaRec("robert", egvJson(100, "2020-11-02T02:05:00"), Timestamp.valueOf("2020-11-02 02:05:00")),
+      KafkaRec("robert", egvJson(265, "2020-11-02T02:10:00"), Timestamp.valueOf("2020-11-02 02:10:00")))
+    q.processAllAvailable()
+    // A second batch on the closed interval's edges, 75 <= v <= 180.
+    in.addData(Seq(74, 75, 180, 181).map(v =>
+      KafkaRec("robert", egvJson(v, "2020-11-02T03:00:00"), new Timestamp(0))): _*)
+    q.processAllAvailable(); q.stop()
+    val got = spark.table("categorized_simple").select("key", "value", "in_range")
+      .as[(String, Int, String)].collect().sortBy(_._2).toSeq
+    assert(got === Seq(("robert", 65, "false"), ("robert", 74, "false"), ("robert", 75, "true"),
+      ("robert", 100, "true"), ("robert", 180, "true"), ("robert", 181, "false"),
+      ("robert", 265, "false")))
   }
 
   test("windowed counts with watermark aggregate per 10-minute window") {
