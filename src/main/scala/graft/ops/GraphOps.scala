@@ -1175,6 +1175,7 @@ object GraphOps {
     val p =
       if (parts > 0) parts
       else seeds.sparkSession.sparkContext.defaultParallelism
+    // One task is correct: `seeds` is one fringe level, within seedBudget.
     val init = seeds.select(col("seed"))
       .withColumn("i", row_number().over(Window.orderBy("seed")) - 1)
       .select(col("seed").as("node_id"), expr(

@@ -393,6 +393,7 @@ object SampleOps {
       .groupBy(col("source")).agg(sum(col("tk")).as("demand"))
     val tot = dem.agg(sum(col("demand")).as("t"),
       count(lit(1)).as("n"))
+    // One task is correct: `dem` has one row per source (20 at every test scale).
     val w = Window.orderBy(col("demand"), col("source"))
     val ranked = dem.crossJoin(broadcast(tot))
       .withColumn("b", expr("t div 2"))

@@ -479,6 +479,7 @@ object SimOps {
   private def sampledCells(v: DataFrame, queryPred: Column,
                            c: Int, nprobe: Int,
                            salt: String): (DataFrame, DataFrame, DataFrame) = {
+    // One task is correct: centW ranks the `limit(c)` centroid sample.
     val centW = Window.orderBy(col("h"), col("vec_id"))
     val cent = v
       .withColumn("h", graft.ops.TextOps.hash64(
@@ -800,6 +801,7 @@ object SimOps {
     val old = vectors.filter(oldPred)
     val batch = withNorm(vectors.filter(!oldPred)
       .select(col("vec_id"), col("embedding")), "embedding", "vn")
+    // One task is correct: centW ranks the `limit(c)` centroid sample.
     val centW = Window.orderBy(col("h"), col("vec_id"))
     val cent = withNorm(old.select(col("vec_id"), col("embedding")),
       "embedding", "cn0")

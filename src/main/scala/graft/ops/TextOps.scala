@@ -1167,6 +1167,7 @@ object TextOps {
           .agg(sum(col("score_micro")).as("total_micro"),
             count(lit(1)).as("n_terms"))
           .orderBy(col("total_micro").desc, col("doc_id")).limit(topK)
+      // One task is correct here: `top` holds at most topK rows.
       top
         .withColumn("rank", row_number().over(
           Window.orderBy(col("total_micro").desc, col("doc_id"))).cast("int"))

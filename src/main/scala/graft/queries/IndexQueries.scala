@@ -242,6 +242,7 @@ object IndexQueries {
             col("vec_id") === 0, 20)
           .select(col("neighbor_id").as("doc_id"),
             col("rank").cast("long").as("vec_rank"))
+        // One task is correct for the rank: two top-20 lists join to <= 40 rows.
         lex.join(vec, Seq("doc_id"), "full_outer")
           .withColumn("rrf_micro",
             coalesce(expr("1000000L div (60L + lex_rank)"), lit(0L)) +

@@ -66,6 +66,7 @@ object SkewQueries {
           .select(col("freq").as("p99_freq"))
         val stats = freq.agg(count(lit(1)).as("n_keys"),
           sum(col("freq")).as("n_rows"), max(col("freq")).as("max_freq"))
+        // One task is correct for this rank: it runs over the 5 top rows.
         freq.orderBy(col("freq").desc, col("o_custkey")).limit(5)
           .withColumn("rank", row_number().over(
             org.apache.spark.sql.expressions.Window

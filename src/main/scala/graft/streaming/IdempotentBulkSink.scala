@@ -1,7 +1,19 @@
 package graft.streaming
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression,
+  InterpretedProjection}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** S8 — the reference's effectively-once Elasticsearch delivery
   * (ElasticSearchConsumer.java:36-63) re-expressed as a foreachBatch sink:
@@ -31,9 +43,17 @@ trait BulkClient extends Serializable {
   * driver-side test. */
 object InMemoryBulkClient extends BulkClient {
   val store = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  var failNextBatches: Int = 0
+  private val failures = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Fails exactly the next `n` bulk calls, also when concurrent
+    * partitions of [[IdempotentBulkSink.writeBatchDistributed]] race for
+    * them: each call takes one failure only while some are left. */
+  def failNextBatches: Int = failures.get
+  def failNextBatches_=(n: Int): Unit = failures.set(n)
+
   override def bulkUpsert(docs: Seq[(String, String)]): Unit = {
-    if (failNextBatches > 0) { failNextBatches -= 1; sys.error("injected bulk failure") }
+    if (failures.getAndUpdate(n => if (n > 0) n - 1 else n) > 0)
+      sys.error("injected bulk failure")
     docs.foreach { case (id, json) => store.put(id, json) }
   }
 }
@@ -62,17 +82,80 @@ object IdempotentBulkSink {
   private def payload(df: DataFrame, keyCols: Seq[String]): DataFrame =
     df.select(docId(keyCols).as("__id"), to_json(struct(df.columns.map(col): _*)).as("__doc"))
 
+  /** What a bound payload depends on: the batch schema, the key columns,
+    * and the session settings `to_json` and the id's casts read. */
+  private final case class Binding(schema: StructType, keyCols: Seq[String],
+                                   timeZone: String, ignoreNullFields: Boolean)
+
+  /** Bound payloads by [[Binding]], least recently used first. A stream
+    * keeps one schema for its life, so this holds at most 3 entries. */
+  private val MaxBindings = 3
+  private val bindings = new java.util.LinkedHashMap[Binding, Seq[Expression]](4, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Binding, Seq[Expression]]): Boolean =
+      size > MaxBindings
+  }
+
+  /** [[payload]] analyzed once per [[Binding]] over an empty frame of the
+    * batch's schema, with its runtime-replaceable expressions (`to_json`)
+    * replaced, bound to the schema's ordinals. */
+  private def boundPayload(df: DataFrame, keyCols: Seq[String]): Seq[Expression] = {
+    val conf = df.sparkSession.sessionState.conf
+    val key = Binding(df.schema, keyCols, conf.sessionLocalTimeZone,
+      conf.getConf(SQLConf.JSON_GENERATOR_IGNORE_NULL_FIELDS))
+    bindings.synchronized(bindings.computeIfAbsent(key, _ => {
+      val empty = df.sparkSession.createDataFrame(java.util.List.of[Row](), df.schema)
+      val Project(exprs, child) =
+        ReplaceExpressions(payload(empty, keyCols).queryExecution.analyzed): @unchecked
+      BindReferences.bindReferences(exprs, AttributeSeq(child.output))
+    }))
+  }
+
+  /** One Spark job over the batch's rows: `perPartition` gets each
+    * partition's (id, doc) pairs, in row order, from the bound payload
+    * evaluated as an interpreted projection. A `foreachBatch` batch is a
+    * frame over a `LogicalRDD` of rows Spark has already planned; the job
+    * runs over that RDD itself, so no second query is analyzed, planned,
+    * code-generated or posted as an SQL execution. Any other frame runs
+    * its own plan's RDD. */
+  private def payloadJob[U: ClassTag](df: DataFrame, keyCols: Seq[String])
+                                     (perPartition: Iterator[(String, String)] => U): Array[U] = {
+    val exprs = boundPayload(df, keyCols)
+    val rows = df.queryExecution.logical match {
+      case batch: LogicalRDD => batch.rdd
+      case _ => df.queryExecution.toRdd
+    }
+    val session = ClassicConversions.castToImpl(df.sparkSession)
+    // `to_json` builds its generator in the task, from the session
+    // settings the job's properties carry.
+    SQLExecution.withSQLConfPropagated(session) {
+      session.sparkContext.runJob(rows, (task: TaskContext, it: Iterator[InternalRow]) => {
+        val project = new InterpretedProjection(exprs)
+        project.initialize(task.partitionId())
+        perPartition(it.map { r =>
+          val out = project(r)
+          (out.getUTF8String(0).toString, out.getUTF8String(1).toString)
+        })
+      })
+    }
+  }
+
   /** The foreachBatch body: serialize rows, bulk-upsert with deterministic
     * ids, bounded bulk size (the reference's max.poll.records=100 analog).
     * Runs on the driver per micro-batch after collecting the (small,
-    * post-aggregation) batch — for large sinks use [[writeBatchDistributed]]. */
+    * post-aggregation) batch — for large sinks use [[writeBatchDistributed]].
+    *
+    * The payload is bound once, not planned per batch: Spark's
+    * `ForeachBatchSink` has already planned the micro-batch and hands over
+    * a frame over a `LogicalRDD` of its rows, so a `select(...).collect()`
+    * here would analyze, optimize, plan and code-generate a second query
+    * every batch, post a second SQL execution, and have the closure
+    * cleaner re-parse `RDD` and `SparkContext`. Instead one job, whose
+    * function is declared here, runs over that RDD. */
   def writeBatch(client: BulkClient, keyCols: Seq[String], bulkSize: Int = 100)
-                (df: DataFrame, batchId: Long): Unit = {
-    payload(df, keyCols).collect()
-      .map { case Row(id: String, doc: String) => (id, doc) }
+                (df: DataFrame, batchId: Long): Unit =
+    payloadJob(df, keyCols)(_.toArray).flatten
       .grouped(bulkSize)
       .foreach(chunk => client.bulkUpsert(chunk.toSeq))
-  }
 
   /** Executor-side variant — the at-scale contract: each partition bulks
     * its own rows through a client it obtains itself (serializable
@@ -80,15 +163,16 @@ object IdempotentBulkSink {
     * driver). A partition failure fails the batch BEFORE the checkpoint
     * commits; the replay re-upserts the same deterministic ids — the same
     * effectively-once guarantee as the driver-side form, with no
-    * collect() bottleneck. */
+    * collect() bottleneck. It shares [[writeBatch]]'s payload path, bound
+    * once for the same reason: the `LogicalRDD` batch Spark hands over is
+    * already planned, and a `foreachPartition` over a second query would
+    * plan it again and have the closure cleaner re-parse `RDD`'s closures
+    * every batch. */
   def writeBatchDistributed(clientFactory: () => BulkClient, keyCols: Seq[String],
                             bulkSize: Int = 100)
-                           (df: DataFrame, batchId: Long): Unit = {
-    payload(df, keyCols).foreachPartition { (rows: Iterator[Row]) =>
+                           (df: DataFrame, batchId: Long): Unit =
+    payloadJob(df, keyCols) { docs =>
       val client = clientFactory()
-      rows.map { case Row(id: String, doc: String) => (id, doc) }
-        .grouped(bulkSize)
-        .foreach(chunk => client.bulkUpsert(chunk.toSeq))
+      docs.grouped(bulkSize).foreach(chunk => client.bulkUpsert(chunk))
     }
-  }
 }

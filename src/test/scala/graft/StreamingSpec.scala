@@ -13,8 +13,25 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.Schemas
 import graft.ops.EgvOps
-import graft.streaming.{EgvStreams, IdempotentBulkSink, InMemoryBulkClient,
+import graft.streaming.{BulkClient, EgvStreams, IdempotentBulkSink, InMemoryBulkClient,
   LocalCheckpointFileManager, StatefulOps}
+
+/** A reading nested in [[PayloadRec]]. */
+case class PayloadReading(unit: String, mgdl: Option[Double])
+
+/** A row with every kind of value the sink's JSON payload must carry
+  * through: timestamps, nulls, a decimal, a nested struct, non-ASCII text,
+  * and keys holding the id separators `_` and `:`. */
+case class PayloadRec(key: String, ts: Timestamp, note: Option[String], dose: BigDecimal,
+                      reading: PayloadReading)
+
+/** Records every bulk call with the partition of the task that made it
+  * (-1 on the driver). */
+object ChunkRecorder extends BulkClient {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[(String, String)])]()
+  override def bulkUpsert(docs: Seq[(String, String)]): Unit =
+    calls.add((Option(org.apache.spark.TaskContext.get()).fold(-1)(_.partitionId()), docs))
+}
 
 /** End-to-end streaming tests: MemoryStream in, memory/foreachBatch sink
   * out — the Spark analog of the reference's TopologyTestDriver pipe-in /
@@ -790,6 +807,134 @@ class StreamingSpec extends SparkSpec {
     q2.processAllAvailable(); q2.stop()
     assert(InMemoryBulkClient.store.size() === 2)
     assert(InMemoryBulkClient.store.containsKey("6:robert_19:2020-11-02T02:00:00"))
+  }
+
+  test("bulk sinks send the (id, doc) pairs select(docId, to_json).collect() gives, " +
+    "byte for byte, in bulkSize chunks in collect order, per session time zone and " +
+    "null-field setting") {
+    import scala.jdk.CollectionConverters._
+    val keys = Seq("key", "ts")
+    val bulkSize = 3
+    val rows = Seq(
+      PayloadRec("a_b:c", Timestamp.valueOf("2020-11-02 02:00:00.125"), Some("ünïcødé 血糖 ✓"),
+        BigDecimal("1.25"), PayloadReading("mg/dL", Some(101.5))),
+      PayloadRec("a", Timestamp.valueOf("2020-11-02 02:05:00"), None, BigDecimal("-0.5"),
+        PayloadReading("mmol/L", None)),
+      PayloadRec(null, Timestamp.valueOf("2020-11-02 23:59:59.999"), Some("\"quoted\"\n"),
+        BigDecimal("123456789.000000001"), null),
+      PayloadRec("1:x_2:y", null, Some(""), BigDecimal("0"), PayloadReading("", Some(-1.0))),
+      PayloadRec("ana", Timestamp.valueOf("2021-03-28 01:30:00"), Some("Ελληνικά"),
+        BigDecimal("7"), PayloadReading("mg/dL", Some(Double.MaxValue))),
+      PayloadRec("ana", Timestamp.valueOf("2021-03-28 03:30:00"), None, BigDecimal("7.1"),
+        PayloadReading("mg/dL", Some(0.1))),
+      PayloadRec("_", Timestamp.valueOf("1969-12-31 23:59:59"), Some("😀"), BigDecimal("2"),
+        PayloadReading(":", Some(3.0))))
+    def expected(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+      df.select(IdempotentBulkSink.docId(keys), to_json(struct(df.columns.map(col): _*)))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    def drain(): Seq[(Int, Seq[(String, String)])] = {
+      val out = ChunkRecorder.calls.asScala.toSeq
+      ChunkRecorder.calls.clear()
+      out
+    }
+    // writeBatch sends collect order in global chunks; writeBatchDistributed
+    // chunks each partition's rows, and its partitions concatenate to
+    // collect order.
+    def assertDriverChunks(want: Seq[(String, String)]): Unit = {
+      val calls = drain()
+      assert(calls.map(_._1).forall(_ == -1))
+      assert(calls.map(_._2) === want.grouped(bulkSize).toSeq)
+    }
+    def assertPartitionChunks(want: Seq[(String, String)]): Unit = {
+      val byPartition = drain().groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
+      for (chunks <- byPartition)
+        assert(chunks.init.forall(_.size == bulkSize) && chunks.last.size <= bulkSize, chunks)
+      assert(byPartition.flatten.flatten === want)
+    }
+    def inSession(tz: String, ignoreNullFields: Boolean = true): Seq[(String, String)] = {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.session.timeZone", tz)
+      session.conf.set("spark.sql.jsonGenerator.ignoreNullFields", ignoreNullFields)
+      import session.implicits._
+      implicit val sqlCtx = session.sqlContext
+      ChunkRecorder.calls.clear()
+      val batch = rows.toDF()
+      val want = expected(batch)
+      assert(want.size === rows.size)
+      IdempotentBulkSink.writeBatch(ChunkRecorder, keys, bulkSize)(batch, 0L)
+      assertDriverChunks(want)
+      IdempotentBulkSink.writeBatchDistributed(() => ChunkRecorder, keys, bulkSize)(batch, 0L)
+      assertPartitionChunks(want)
+      for (distributed <- Seq(false, true)) {
+        val in = MemoryStream[PayloadRec]
+        val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, String)]]()
+        val q = in.toDF().writeStream.foreachBatch { (df: org.apache.spark.sql.DataFrame,
+                                                     id: Long) =>
+          seen.add(expected(df))
+          if (distributed)
+            IdempotentBulkSink.writeBatchDistributed(() => ChunkRecorder, keys, bulkSize)(df, id)
+          else IdempotentBulkSink.writeBatch(ChunkRecorder, keys, bulkSize)(df, id)
+        }.option("checkpointLocation", newCheckpoint("graft-payload-ckpt")).start()
+        in.addData(rows: _*)
+        q.processAllAvailable(); q.stop()
+        val streamed = seen.asScala.toSeq.flatten
+        assert(streamed.sorted === want.sorted)
+        if (distributed) assertPartitionChunks(streamed) else assertDriverChunks(streamed)
+      }
+      want
+    }
+    val utc = inSession("UTC")
+    val kolkata = inSession("Asia/Kolkata")
+    val keepNulls = inSession("UTC", ignoreNullFields = false)
+    // The same schema and keys under another session setting give other
+    // ids or docs, so a payload bound for an earlier session cannot pass.
+    assert(utc.map(_._1) !== kolkata.map(_._1))
+    assert(utc.map(_._2) !== kolkata.map(_._2))
+    assert(keepNulls.map(_._1) === utc.map(_._1))
+    assert(keepNulls.exists(_._2.contains("\"note\":null")))
+    assert(!utc.exists(_._2.contains("\"note\":null")))
+  }
+
+  test("a foreachBatch stream through writeBatch posts one SQL execution and runs one job " +
+    "per micro-batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // (job group, "execution" | "job") for every event, in arrival order.
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, "job"))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => events.add((s.jobGroupId.orNull, "execution"))
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      InMemoryBulkClient.store.clear()
+      val in = MemoryStream[KafkaRec]
+      val q = startLookupSink(in, newCheckpoint("graft-cost-ckpt"))
+      lookupBatches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      q.stop()
+      assert(InMemoryBulkClient.store.size === lookupBatches.flatten.size)
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      assert(batches === lookupBatches.size)
+      // Listener events arrive in order: once a marker job started after
+      // the stream is seen, every event of the stream is.
+      val marker = java.util.UUID.randomUUID.toString
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30000000000L
+      while (!events.contains((marker, "job")) && System.nanoTime < deadline) Thread.sleep(10)
+      assert(events.contains((marker, "job")), "marker job never reached the listener")
+      import scala.jdk.CollectionConverters._
+      val ofStream = events.asScala.toSeq.filter(_._1 == q.runId.toString).map(_._2)
+      assert(ofStream.count(_ == "execution") === batches, ofStream)
+      assert(ofStream.count(_ == "job") === batches, ofStream)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("heavy-hitters sketch as streaming state: final top-k equals batch exact") {
