@@ -24,32 +24,16 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val spark = GraftSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, logLevel = "WARN")
-    // The near-dup pair table is computed once per corpus snapshot and
-    // consumed by four queries (clusters, cluster_rep, corpus_curation,
-    // train_val_split) — the documented jaccardPairsCached consumption
-    // shape at 100 TB. The bench measures that amortized reality: the
-    // first consumer pays the materialization, later ones scan parquet.
-    // (Verify leaves this unset: the gate runs each query independently.)
-    spark.conf.set("graft.pairs.dir",
-      java.nio.file.Files.createTempDirectory("graft-pairs").toString)
-    // Same shape for the k-NN edge table: built once, consumed by the
-    // whole graph stack (knn_graph, pagerank, triangles).
-    spark.conf.set("graft.knn.dir",
-      java.nio.file.Files.createTempDirectory("graft-knn").toString)
-    // And for the diameter family's base BFS sweeps: the double-sweep
-    // and iFUB gates open with the same (start -> antipode) chain over
-    // the same cached k-NN graph — computed once, shared.
-    spark.conf.set("graft.bfs.dir",
-      java.nio.file.Files.createTempDirectory("graft-bfs").toString)
-    // And for the synthesized media/crawl blob fixtures (r13 verdict
-    // #3/#4): the WARC/MP3 gates' in-query fixture ENCODERS (gzip
-    // deflate, frame assembly) dominated their bench lines; cached,
-    // the timed pass measures the parse path. Real corpus bytes
-    // arrive materialized — only the synthetic gate has an encoder
-    // to split out. (Verify leaves this unset: the oracle gate runs
-    // the builder inline, same bytes.)
-    spark.conf.set("graft.fixture.dir",
-      java.nio.file.Files.createTempDirectory("graft-fixture").toString)
+    // Every shared artifact kind is stored for the run: the pair table
+    // (consumed by dedup_clusters, cluster_rep, corpus_curation,
+    // train_val_split), the k-NN edges (the whole graph stack), the
+    // diameter family's base BFS sweeps, and the synthesized media/crawl
+    // blob fixtures (r13 verdict #3/#4: the WARC/MP3 gates' in-query
+    // ENCODERS dominated their bench lines; stored, the timed pass
+    // measures the parse path). The first consumer pays the build, later
+    // ones scan parquet. (Verify leaves every dir unset: the gate runs
+    // each query independently, builders inline, same bytes.)
+    Artifacts.setUp(spark)
     // Warm-up: codegen + JIT at the smallest SF; failures surface in the
     // timed pass instead of aborting the bench.
     SparkEntry.queries.foreach { case (_, fn) =>
@@ -83,14 +67,14 @@ object Bench {
                                     //   shared with graph_diameter_tk_capped
                                     //   (named by in_pass in the first
                                     //   round-13 artifact)
-      "mm_jpeg_decode",             // FixtureCache: jpeg_decode blobs
-      "mm_warc_records",            // FixtureCache: warc_records blobs
-      "pipeline_warc_to_wet",       // FixtureCache: warc_wet blobs
-      "pipeline_warc_http",         // FixtureCache: warc_http blobs
-      "mm_mp3_meta",                // FixtureCache: mp3_meta blobs
-      "pipeline_http_redirects",    // FixtureCache: http_redirects blobs
-      "dedup_warc_digest",          // FixtureCache: warc_digest blobs
-      "pipeline_http_revisit")      // FixtureCache: http_revisit blobs
+      "mm_jpeg_decode",             // fixture: jpeg_decode blobs
+      "mm_warc_records",            // fixture: warc_records blobs
+      "pipeline_warc_to_wet",       // fixture: warc_wet blobs
+      "pipeline_warc_http",         // fixture: warc_http blobs
+      "mm_mp3_meta",                // fixture: mp3_meta blobs
+      "pipeline_http_redirects",    // fixture: http_redirects blobs
+      "dedup_warc_digest",          // fixture: warc_digest blobs
+      "pipeline_http_revisit")      // fixture: http_revisit blobs
     val preMark = BuildLedger.mark()
     val preT0 = System.nanoTime()
     artifactProducers.foreach { n =>

@@ -869,43 +869,25 @@ object DedupOps {
   /** Materialized-pair reuse: at 100 TB the near-dup pair table is
     * computed once per corpus snapshot and consumed many times (cluster
     * canonicalization, curation, audits) — recomputing the shingle
-    * self-join per consumer is the expensive anti-pattern. When the
-    * session conf `graft.pairs.dir` is set, the first caller materializes
-    * [[jaccardPairs]] as parquet under it (keyed by threshold + cap) and
-    * every later caller scans that parquet instead of re-running the
-    * pipeline; `_SUCCESS` guards against half-written directories. Unset
-    * (the driver gate's default), this is exactly [[jaccardPairs]]. */
+    * self-join per consumer is the expensive anti-pattern. So it is a
+    * `pairs`-kind [[graft.Artifacts]] entry: with `graft.pairs.dir` set
+    * the first caller writes it and every later caller scans it. Unset
+    * (the oracle gate's default), this is exactly [[jaccardPairs]].
+    *
+    * The key identifies the CORPUS, not just the parameters: the same
+    * threshold at two scale factors (check.py runs sf0.001 AND sf0.01)
+    * must not read each other's pair tables. Identity = input file set
+    * + the (textCol, idCol) pair read from it; an in-memory frame has
+    * no files, so it always recomputes. LIMIT: filters applied to
+    * `docs` are invisible to inputFiles — callers passing a derived
+    * frame must leave graft.pairs.dir unset. */
   def jaccardPairsCached(docs: DataFrame, textCol: String, idCol: String,
                          threshold: Double,
-                         maxShingleFreq: Int = MaxShingleFreq): DataFrame = {
-    val spark = docs.sparkSession
-    val dir = spark.conf.get("graft.pairs.dir", "")
-    // Cache key must identify the CORPUS, not just the parameters: the
-    // same threshold at two scale factors (check.py runs sf0.001 AND
-    // sf0.01) must not read each other's pair tables. Identity = input
-    // file set + the (textCol, idCol) pair read from it; an in-memory
-    // frame has no files, so caching is unsafe and we fall through.
-    // LIMIT: filters/transformations applied to `docs` are invisible to
-    // inputFiles — callers passing a derived frame must leave
-    // graft.pairs.dir unset.
-    val corpus = docs.inputFiles.sorted.mkString("\n")
-    if (dir.isEmpty || corpus.isEmpty)
+                         maxShingleFreq: Int = MaxShingleFreq): DataFrame =
+    graft.Artifacts.cached(docs.sparkSession, "pairs", "jaccard",
+        Seq(textCol, idCol, threshold, maxShingleFreq), docs.inputFiles) {
       jaccardPairs(docs, textCol, idCol, threshold, maxShingleFreq)
-    else {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$corpus|$textCol|$idCol".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val path = s"$dir/jaccard_${tag}_t${threshold}_f$maxShingleFreq"
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(hp, "_SUCCESS")))
-        graft.BuildLedger.timed(s"jaccard_$tag") {
-          jaccardPairs(docs, textCol, idCol, threshold, maxShingleFreq)
-            .write.mode("overwrite").parquet(path)
-        }
-      spark.read.parquet(path)
     }
-  }
 
   /** MinHash signatures via explode + hash aggregation:
     * sig_i = min over shingles of (a_i * (x mod p) + b_i) mod p, computed

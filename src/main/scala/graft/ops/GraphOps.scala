@@ -2,6 +2,7 @@ package graft.ops
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -948,7 +949,7 @@ object GraphOps {
     val conf = spark.sparkContext.hadoopConfiguration
     val bytes = keyFiles.distinct.map { f =>
       try {
-        val p = new org.apache.hadoop.fs.Path(f)
+        val p = new Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
       } catch { case NonFatal(_) => 0L }
     }.sum
@@ -1041,9 +1042,10 @@ object GraphOps {
     * otherwise rebuild sweeps the other just ran. When session conf
     * `graft.bfs.dir` is set AND the caller passes a non-empty
     * `graphTag`, the sweep's reached-distance frame (node_id, dist)
-    * persists as parquet keyed by (input files, graphTag, seed), with
-    * the COMPUTE depth and capped flag encoded in the directory name
-    * (`bfs_<tag>_d<depth>_c<0|1>`, `_SUCCESS`-guarded).
+    * is a `bfs`-kind [[graft.Artifacts]] entry keyed by (input files,
+    * graphTag, seed), with the COMPUTE depth and capped flag encoded in
+    * the entry name (`bfs_<tag>_d<depth>_c<0|1>`, read only once
+    * committed).
     *
     * Depth sharing is lossless because BFS layers are cap-independent:
     * a stored sweep of depth D serves any reader needing d ≤ D — rows
@@ -1073,64 +1075,52 @@ object GraphOps {
       graphTag: String, keyFiles: Seq[String],
       persist: Boolean = true): (DataFrame, Boolean) = {
     val spark = nodes.sparkSession
-    val dir = spark.conf.get("graft.bfs.dir", "")
     def compute(depth: Int): (DataFrame, Boolean) =
       singleBfs(spark, seedId, eSym, depth, graphParts(spark, keyFiles))
-    val corpus = keyFiles.sorted.mkString("\n")
-    // `persist = false` callers (round-12 verdict #7: iFUB's graph-
-    // determined later pivots, which no other gate can ever share)
-    // still READ a hit if one exists, but a miss computes without
-    // paying the write — the artifact dir stays reserved for sweeps
-    // with actual cross-gate reuse (the hash start and its antipodes).
-    if (dir.isEmpty || graphTag.isEmpty || corpus.isEmpty) {
+    def inline: (DataFrame, Boolean) = {
       val (d, tr) = compute(maxDepth)
       (d.localCheckpoint(), tr)
-    } else {
-      val cd = math.max(maxDepth, computeDepth)
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$corpus|$graphTag|$seedId".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val base = new org.apache.hadoop.fs.Path(dir)
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val re = s"bfs_${tag}_d(\\d+)_c([01])".r
-      val existing =
-        if (!fs.exists(base)) None
-        else fs.listStatus(base).toSeq.map(_.getPath)
-          .flatMap { p =>
-            p.getName match {
-              case re(dS, cS) if fs.exists(
-                  new org.apache.hadoop.fs.Path(p, "_SUCCESS")) =>
-                Some((p, dS.toInt, cS == "1"))
-              case _ => None
-            }
-          }
-          .filter(_._2 >= maxDepth)
-          .sortBy(-_._2).headOption
-      if (existing.isEmpty && !persist) {
-        val (d, tr) = compute(maxDepth)
-        (d.localCheckpoint(), tr)
-      } else {
-        val (path, storedDepth, storedCapped) = existing.getOrElse {
-          graft.BuildLedger.timed(s"bfs_${tag}_s$seedId") {
-            val (d, tr) = compute(cd)
-            val p = new org.apache.hadoop.fs.Path(base,
-              s"bfs_${tag}_d${cd}_c${if (tr) 1 else 0}")
-            // The sweep frame is O(|V|) slim (node_id, dist) rows; at
-            // the analytics grain one file is the right write shape (32
-            // tiny part files cost ~0.3 s each write+list — measured as
-            // the graph_diameter_tk bench regression). Graphs past ~10M
-            // nodes should raise the knob.
-            val wp = spark.conf.get("graft.bfs.write.partitions", "1").toInt
-            d.coalesce(wp).write.mode("overwrite").parquet(p.toString)
-            (p, cd, tr)
-          }
+    }
+    val slot =
+      if (graphTag.isEmpty) None
+      else graft.Artifacts.slot(spark, "bfs", Seq(graphTag, seedId), keyFiles)
+    slot match {
+      case None => inline
+      case Some((dir, tag)) =>
+        val re = s"bfs_${tag}_d(\\d+)_c([01])".r
+        def entry(p: Path): Option[(Path, Int, Boolean)] = p.getName match {
+          case re(dS, cS) => Some((p, dS.toInt, cS == "1"))
+          case _ => None
         }
-        val full = spark.read.parquet(path.toString)
-        val capped =
-          if (storedDepth == maxDepth) storedCapped
-          else !full.filter(col("dist") === maxDepth + 1).isEmpty
-        (full.filter(col("dist") <= maxDepth).localCheckpoint(), capped)
-      }
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val stored =
+          (if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath) else Nil)
+            .flatMap(entry)
+            .filter(e => e._2 >= maxDepth && graft.Artifacts.committed(spark, e._1))
+            .sortBy(-_._2).headOption
+        // `persist = false` callers (round-12 verdict #7: iFUB's graph-
+        // determined later pivots, which no other gate can ever share)
+        // still READ a hit if one exists, but a miss computes without
+        // paying the write — the artifact dir stays reserved for sweeps
+        // with actual cross-gate reuse (the hash start and its antipodes).
+        if (stored.isEmpty && !persist) inline
+        else {
+          val cd = math.max(maxDepth, computeDepth)
+          // The sweep frame is O(|V|) slim (node_id, dist) rows; at the
+          // analytics grain one file is the right write shape (32 tiny
+          // part files cost ~0.3 s each write+list — measured as the
+          // graph_diameter_tk bench regression).
+          val (path, storedDepth, storedCapped) = stored.getOrElse(entry(
+            graft.Artifacts.write(s"bfs_${tag}_s$seedId", Some(1)) {
+              val (d, tr) = compute(cd)
+              (d, new Path(dir, s"bfs_${tag}_d${cd}_c${if (tr) 1 else 0}"))
+            }).get)
+          val full = spark.read.parquet(path.toString)
+          val capped =
+            if (storedDepth == maxDepth) storedCapped
+            else !full.filter(col("dist") === maxDepth + 1).isEmpty
+          (full.filter(col("dist") <= maxDepth).localCheckpoint(), capped)
+        }
     }
   }
 

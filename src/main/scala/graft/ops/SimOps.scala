@@ -120,36 +120,20 @@ object SimOps {
   /** Materialized exact-top-k reuse — the [[knnEdgesCached]] pattern
     * for the brute-force reference (round-11 verdict #4): the recall
     * audit's ground-truth arm and the `sim_topk_brute` gate compute
-    * the SAME O(q·n) exact scan per corpus snapshot. When session conf
-    * `graft.knn.dir` is set, the first caller materializes it keyed by
-    * (corpus files, predTag, k) and later callers scan parquet.
-    * `predTag` must name `queryPred`'s semantics uniquely (it IS the
-    * cache key — two different predicates must never share a tag);
-    * unset conf / in-memory inputs recompute (the Verify gate's
-    * path). */
+    * the SAME O(q·n) exact scan per corpus snapshot, so it is a
+    * `knn`-kind [[graft.Artifacts]] entry keyed by (corpus files,
+    * predTag, k). `predTag` must name `queryPred`'s semantics uniquely
+    * (it IS the cache key — two different predicates must never share
+    * a tag); an empty tag recomputes, as does an unset dir or an
+    * in-memory input (the Verify gate's path). */
   def bruteTopKCached(vectors: DataFrame, queryPred: Column, k: Int,
-                      predTag: String): DataFrame = {
-    val spark = vectors.sparkSession
-    val dir = spark.conf.get("graft.knn.dir", "")
-    val corpus = vectors.inputFiles.sorted.mkString("\n")
-    if (dir.isEmpty || corpus.isEmpty || predTag.isEmpty)
+                      predTag: String): DataFrame =
+    if (predTag.isEmpty) topKBruteForce(vectors, queryPred, k)
+    // |queries|·k slim rows — one file is the right write grain
+    else graft.Artifacts.cached(vectors.sparkSession, "knn", "brute",
+        Seq(predTag, k), vectors.inputFiles, files = Some(1)) {
       topKBruteForce(vectors, queryPred, k)
-    else {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$corpus|brute|$predTag|$k".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val path = s"$dir/brute_${tag}_k$k"
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(hp, "_SUCCESS")))
-        // |queries|·k slim rows — one file is the right write grain
-        graft.BuildLedger.timed(s"brute_$tag") {
-          topKBruteForce(vectors, queryPred, k)
-            .coalesce(1).write.mode("overwrite").parquet(path)
-        }
-      spark.read.parquet(path)
     }
-  }
 
   def topKBruteForceSql(table: String, queryPredSql: String, k: Int): String =
     s"""WITH queries AS (SELECT vec_id AS query_id, embedding AS q
@@ -1341,40 +1325,23 @@ object SimOps {
     * `DedupOps.jaccardPairsCached`: the full-corpus k-NN edge table (the
     * expensive LSH build + exact verify over EVERY vector) is computed
     * once per corpus snapshot and consumed by the whole graph stack
-    * (`sim_knn_graph`, `graph_pagerank`, `graph_triangles`). When the
-    * session conf `graft.knn.dir` is set, the first caller materializes
-    * the table as parquet (keyed by corpus file set + k + LSH config)
-    * and later callers scan it; `_SUCCESS` guards half-written dirs.
-    * Unset (the driver gate's default), this is exactly
-    * [[topKLshMulti]] with an all-rows query predicate. Same
-    * derived-frame limit as the pairs cache: in-memory inputs have no
-    * files and always recompute. */
+    * (`sim_knn_graph`, `graph_pagerank`, `graph_triangles`), as a
+    * `knn`-kind [[graft.Artifacts]] entry keyed by corpus files + k +
+    * LSH config. Unset dir (the oracle gate's default), this is exactly
+    * [[topKLshMulti]] with an all-rows query predicate; in-memory inputs
+    * have no files and always recompute.
+    *
+    * `variant` disambiguates DERIVED corpora that share the same input
+    * files (e.g. the HNSW level subsets — a filtered frame reports its
+    * parent's inputFiles, so without the tag two different subsets
+    * would collide on one entry). */
   def knnEdgesCached(vectors: DataFrame, k: Int,
                      tables: Seq[Seq[Seq[Double]]],
                      variant: String = ""): DataFrame = {
-    val spark = vectors.sparkSession
-    val dir = spark.conf.get("graft.knn.dir", "")
-    val corpus = vectors.inputFiles.sorted.mkString("\n")
-    if (dir.isEmpty || corpus.isEmpty)
+    val cfg = tables.map(_.map(_.mkString(",")).mkString(";")).mkString("|")
+    graft.Artifacts.cached(vectors.sparkSession, "knn", "knn",
+        Seq(k, cfg, variant), vectors.inputFiles) {
       topKLshMulti(vectors, lit(true), k, tables)
-    else {
-      // `variant` disambiguates DERIVED corpora that share the same
-      // input files (e.g. the HNSW level subsets — a filtered frame
-      // reports its parent's inputFiles, so without the tag two
-      // different subsets would collide on one cache entry).
-      val cfg = tables.map(_.map(_.mkString(",")).mkString(";")).mkString("|")
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$corpus|$k|$cfg|$variant".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val path = s"$dir/knn_${tag}_k$k"
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(hp, "_SUCCESS")))
-        graft.BuildLedger.timed(s"knn_$tag") {
-          topKLshMulti(vectors, lit(true), k, tables)
-            .write.mode("overwrite").parquet(path)
-        }
-      spark.read.parquet(path)
     }
   }
 

@@ -20,20 +20,10 @@ object PlanSnap {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.001")
     val spark = graft.GraftSession(32)
-    // Mirror Bench's shared-artifact caches so the captured plans are the
-    // bench's warm-consume shapes (without these, knnEdgesCached & co.
+    // Mirror Bench's shared-artifact stores so the captured plans are the
+    // bench's warm-consume shapes (without them, knnEdgesCached & co.
     // plan their full inline builds — a shape the timed pass never runs).
-    // Env overrides allow pointing at a pre-built dir across runs.
-    def tempDir(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
-    spark.conf.set("graft.knn.dir",
-      sys.env.getOrElse("SPARK_GRAFT_KNN_DIR", tempDir("graft-knn")))
-    spark.conf.set("graft.pairs.dir",
-      sys.env.getOrElse("SPARK_GRAFT_PAIRS_DIR", tempDir("graft-pairs")))
-    spark.conf.set("graft.bfs.dir",
-      sys.env.getOrElse("SPARK_GRAFT_BFS_DIR", tempDir("graft-bfs")))
-    spark.conf.set("graft.fixture.dir",
-      sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIR", tempDir("graft-fixture")))
+    graft.Artifacts.setUp(spark)
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)
     names.foreach { n =>

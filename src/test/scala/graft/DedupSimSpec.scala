@@ -1186,6 +1186,59 @@ class DedupSimSpec extends SparkSpec {
     } finally spark.conf.unset("graft.knn.dir")
   }
 
+  test("artifact store: one ledger record per build and none per read; " +
+    "an entry with no _SUCCESS is rebuilt, never read; a one-file " +
+    "corpus rewritten in place is served from a new entry") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import spark.implicits._
+    def vecs(n: Int, step: Double) = (0 until n).map { i =>
+      val th = step * i
+      (i.toLong, Array(math.cos(th).toFloat, math.sin(th).toFloat))
+    }.toDF("vec_id", "embedding")
+    def inline(v: org.apache.spark.sql.DataFrame) =
+      SimOps.topKBruteForce(v, col("vec_id") < 3, 4).collect().toSeq
+    val dataDir = Files.createTempDirectory("artg")
+    val corpus = dataDir.resolve("emb.parquet")
+    // A one-file table, stored the way the sf* test data is.
+    def writeCorpus(v: org.apache.spark.sql.DataFrame): Unit = {
+      val out = dataDir.resolve("out").toString
+      v.coalesce(1).write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(f => f.getName.startsWith("part-")).get
+      Files.move(part.toPath, corpus, StandardCopyOption.REPLACE_EXISTING)
+    }
+    val cacheDir = Files.createTempDirectory("artc").toString
+    def entries(): Seq[String] =
+      Option(new java.io.File(cacheDir).listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("brute_")).sorted.toSeq
+    def cached() = SimOps.bruteTopKCached(spark.read.parquet(corpus.toString),
+      col("vec_id") < 3, 4, "t").collect().toSeq
+    val (v0, v1) = (vecs(10, math.Pi / 20), vecs(12, math.Pi / 10))
+    val (want0, want1) = (inline(v0), inline(v1))
+    assert(want0 !== want1)
+    writeCorpus(v0)
+    spark.conf.set("graft.knn.dir", cacheDir)
+    try {
+      val m0 = BuildLedger.mark()
+      assert(cached() === want0)
+      assert(entries().size === 1 && BuildLedger.mark() === m0 + 1)
+      assert(cached() === want0)
+      assert(entries().size === 1 && BuildLedger.mark() === m0 + 1)
+      // A build that died mid-write: other rows in the entry, no _SUCCESS.
+      val entry = s"$cacheDir/${entries().head}"
+      SimOps.topKBruteForce(v1, col("vec_id") < 3, 4)
+        .write.mode("overwrite").parquet(entry)
+      Files.delete(Paths.get(entry, "_SUCCESS"))
+      assert(cached() === want0)
+      assert(Files.exists(Paths.get(entry, "_SUCCESS")))
+      assert(entries().size === 1 && BuildLedger.mark() === m0 + 2)
+      // The same file path, rewritten with other rows.
+      writeCorpus(v1)
+      assert(cached() === want1)
+      assert(entries().size === 2 && BuildLedger.mark() === m0 + 3)
+    } finally spark.conf.unset("graft.knn.dir")
+  }
+
   test("bfsDistCached: double sweep at cacheDepth 12 equals the " +
     "uncached depth-8 run on a deeper-than-cap path; a following iFUB " +
     "REUSES the shared sweeps (one new cache dir on the shallow path, " +

@@ -206,6 +206,34 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("graft.pairs.dir", "")
   }
 
+  test("blob fixtures build inline with no dir; with a dir the first run " +
+      "writes one entry and later runs read it; a version bump writes " +
+      "another") {
+    val q = Catalog.queries("mm_warc_records")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toString).sorted
+    val dir = java.nio.file.Files.createTempDirectory("graft-fixture").toString
+    def entries(): Seq[String] =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("fixture_")).toSeq
+    val m0 = BuildLedger.mark()
+    val inline = rows(q(spark, d))
+    assert(BuildLedger.mark() === m0, "no dir: the builder runs inline")
+    spark.conf.set("graft.fixture.dir", dir)
+    try {
+      assert(rows(q(spark, d)) === inline)
+      assert(entries().size === 1 && BuildLedger.mark() === m0 + 1)
+      assert(rows(q(spark, d)) === inline)
+      assert(entries().size === 1 && BuildLedger.mark() === m0 + 1,
+        "a later run reads the entry")
+      val docs = Tables.documents(spark, d)
+      Artifacts.cached(spark, "fixture", "fixture_warc_records", Seq(3),
+        docs.inputFiles)(docs.select("doc_id"))
+      assert(entries().size === 2 && BuildLedger.mark() === m0 + 2,
+        "a new version is a new entry")
+    } finally spark.conf.unset("graft.fixture.dir")
+  }
+
   test("recall audit consumes the materialized k-NN cache and shares one " +
       "coarse-cell build across the ivf and ivfpq arms") {
     import graft.ops.SimOps
