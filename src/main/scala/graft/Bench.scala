@@ -34,6 +34,12 @@ object Bench {
     // ones scan parquet. (Verify leaves every dir unset: the gate runs
     // each query independently, builders inline, same bytes.)
     Artifacts.setUp(spark)
+    // With the warm dir the target dir, the warm-up builds every artifact
+    // the prebuild pass would, so the construction seconds count from
+    // here.
+    val sameDir = java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize ==
+      java.nio.file.Paths.get(warmDir).toAbsolutePath.normalize
+    val warmMark = BuildLedger.mark()
     // Warm-up: codegen + JIT at the smallest SF; failures surface in the
     // timed pass instead of aborting the bench.
     SparkEntry.queries.foreach { case (_, fn) =>
@@ -75,7 +81,7 @@ object Bench {
       "pipeline_http_redirects",    // fixture: http_redirects blobs
       "dedup_warc_digest",          // fixture: warc_digest blobs
       "pipeline_http_revisit")      // fixture: http_revisit blobs
-    val preMark = BuildLedger.mark()
+    val preMark = if (sameDir) warmMark else BuildLedger.mark()
     val preT0 = System.nanoTime()
     artifactProducers.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>

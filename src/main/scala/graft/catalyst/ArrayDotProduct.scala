@@ -162,13 +162,14 @@ object GraftFunctions {
         org.apache.spark.sql.functions.udaf(
           new CmsAgg, org.apache.spark.sql.Encoders.scalaLong))
     // The top-k rewrite needs both its optimizer rule and its planner
-    // strategy, the percentile_disc and banded-join rewrites their
-    // rules. Runtime
+    // strategy, a bound stream stage its strategy, the percentile_disc
+    // and banded-join rewrites their rules. Runtime
     // `experimental` install reaches any session, including a bare one
     // built without any Graft configuration.
     if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKStrategy
+    graft.plans.BoundStageStrategy.install(spark)
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.TopKRewriteRule))
       spark.experimental.extraOptimizations =

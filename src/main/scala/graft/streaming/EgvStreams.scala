@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, Outpu
 
 import graft.model.Schemas
 import graft.ops.EgvOps
+import graft.plans.BoundStage
 
 /** Streaming layer: the reference's Kafka topologies re-expressed on
   * Structured Streaming (SURVEY.md §2.1 S3-S7, §2.7 G1-G6).
@@ -82,13 +83,19 @@ object EgvStreams {
       .option("checkpointLocation", checkpoint)
 
   /** The filter-high topology (StreamsFilterEgvs.java:24-32) as a
-    * streaming transform: egvs_topic → value >= 200 → high_egvs. */
+    * streaming transform: egvs_topic → value >= 200 → high_egvs. On a
+    * stream the stage is planned once, here ([[graft.plans.BoundStage]]):
+    * the reference builds its topology once and each record only runs
+    * through its operators, where Spark would otherwise analyze, optimize,
+    * plan and code-generate the same decode and filter on every trigger. */
   def filterHighTopology(parsed: DataFrame): DataFrame =
-    EgvOps.filterHigh(parsed)
+    BoundStage.wrap(EgvOps.filterHigh(parsed))
 
-  /** The categorize-simple topology (CategorizeWithSimpleRule.java:47-70). */
+  /** The categorize-simple topology (CategorizeWithSimpleRule.java:47-70),
+    * planned once on a stream for the reason [[filterHighTopology]]
+    * gives. */
   def categorizeSimpleTopology(parsed: DataFrame): DataFrame =
-    EgvOps.categorizeSimple(parsed)
+    BoundStage.wrap(EgvOps.categorizeSimple(parsed))
 
   /** The KTable-lookup topology (CategorizeWithKTableLookup.java:47-79),
     * the Spark-native equivalent of the reference's fully-scanned local
@@ -97,14 +104,18 @@ object EgvStreams {
     * and a TorrentBroadcast per micro-batch. So when `ranges` is
     * driver-local (a `LocalRelation`, as `Seq(...).toDF` makes) and its
     * intervals are pairwise disjoint, its rows are read once, here, and
-    * inlined as one CASE chain ([[EgvOps.inlineRangeLookup]]). Any other
-    * ranges frame (a table, a per-batch snapshot whose updates must land
-    * at the next batch boundary, or overlapping intervals, where the join
-    * emits every match) keeps the broadcast join of
-    * [[EgvOps.categorizeWithLookup]]. Both give the same columns. */
+    * inlined as one CASE chain ([[EgvOps.inlineRangeLookup]]); on a
+    * stream that stage is then planned once, here, as
+    * [[filterHighTopology]]'s is, so a trigger neither re-optimizes nor
+    * re-generates code for the decode and the chain. Any other ranges
+    * frame (a table, a per-batch snapshot whose updates must land at the
+    * next batch boundary, or overlapping intervals, where the join emits
+    * every match) keeps the broadcast join of
+    * [[EgvOps.categorizeWithLookup]], planned per batch. Both give the
+    * same columns. */
   def categorizeLookupTopology(parsed: DataFrame, ranges: DataFrame): DataFrame = {
     val events = parsed.withColumn("ts", col("systemTs"))
-    EgvOps.inlineRangeLookup(events, ranges)
+    EgvOps.inlineRangeLookup(events, ranges).map(BoundStage.wrap)
       .getOrElse(EgvOps.categorizeWithLookup(events, ranges))
   }
 

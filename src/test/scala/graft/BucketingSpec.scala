@@ -13,7 +13,7 @@ class BucketingSpec extends SparkSpec {
 
   test("clustered write: files hold disjoint key ranges; key predicate prunes to one file") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cluster").toString + "/t"
+    val dir = tempDir("graft-cluster").toString + "/t"
     val orders = Tables.orders(spark, d).select("o_orderkey", "o_totalprice")
     Bucketing.writeClustered(orders, dir, "o_orderkey", files = 4)
     // Every row survives, and per-file key ranges are pairwise disjoint —
@@ -55,7 +55,7 @@ class BucketingSpec extends SparkSpec {
     assert(got.getLong(1) === ref(5, 6, 3))
     assert(got.getLong(2) === 0L)
 
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val base = tempDir("graft-zorder").toString
     val orders = Tables.orders(spark, d)
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val total = orders.count()
@@ -126,7 +126,7 @@ class BucketingSpec extends SparkSpec {
 
   test("partitioned layout prunes whole partitions at planning time") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events"
+    val dir = tempDir("graft-part").toString + "/events"
     Bucketing.writePartitioned(
       Tables.events(spark, d).select("event_id", "ts", "event_type", "value"),
       dir, Seq("event_type"))

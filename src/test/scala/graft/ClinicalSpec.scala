@@ -16,7 +16,7 @@ class ClinicalSpec extends SparkSpec {
 
   private def eventsDir(rows: Seq[(Long, Long, Long, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("clin").toString
+    val dir = tempDir("clin").toString
     rows.toDF("event_id", "sec", "user_id", "value")
       .select(col("event_id"), timestamp_seconds(col("sec")).as("ts"),
         col("user_id"), lit("egv").as("event_type"), col("value"),
@@ -65,7 +65,7 @@ class ClinicalSpec extends SparkSpec {
     // the 4 leavers as a class of four — re-identifiable. The refined
     // remaining-count sees 4 < k and escalates; with srcB's 2 unsafe
     // docs the lang remainder is 6 >= k → all six publish level 2 "xx".
-    val dir = java.nio.file.Files.createTempDirectory("kanon").toString
+    val dir = tempDir("kanon").toString
     val rows =
       (1L to 4L).map(i => (i, "", "xx", "srcA", 100L + i)) ++
       (5L to 9L).map(i => (i, "", "xx", "srcA", 4100L + i)) ++
@@ -135,7 +135,7 @@ class ClinicalSpec extends SparkSpec {
 
   test("ref_event_response buckets the 2h post-anchor window, left-inclusive") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("resp").toString
+    val dir = tempDir("resp").toString
     Seq((1L, 0L, 1L, "purchase", 100.0),   // anchor; own reading in bucket 0
       (2L, 600L, 1L, "egv", 110.0),        // bucket 0
       (3L, 2000L, 1L, "egv", 120.0),       // bucket 1
@@ -253,7 +253,7 @@ class ClinicalSpec extends SparkSpec {
 
   test("q_snapshot_diff classifies every residue class correctly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString
+    val dir = tempDir("snap").toString
     // 1 → unchanged; 5 → added (5 % 11 = 5); 7 → removed (7 % 13 = 7);
     // 10 → changed (10 % 5 = 0, present in both versions)
     Seq((1L, "alpha"), (5L, "beta"), (7L, "gamma"), (10L, "delta"))
@@ -298,7 +298,7 @@ class ClinicalSpec extends SparkSpec {
 
   test("sim_quantile_transform: discrete deciles, boundary values inclusive") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("qt").toString
+    val dir = tempDir("qt").toString
     // one dim, values 1..10: percentile_disc(p) of 1..10 is the value at
     // cum >= p, so boundaries are 1..9; decile(v) = #boundaries <= v.
     (1 to 10).map(i => (i.toLong, Seq(i.toFloat), 0))
@@ -312,7 +312,7 @@ class ClinicalSpec extends SparkSpec {
 
   test("pipeline_entity_resolution clusters transitively beyond pairwise reach") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("er").toString
+    val dir = tempDir("er").toString
     // aaaa~aabb (dist 2), aabb~abbb (dist 2), aaaa~abbb (dist 3 — NOT a
     // pairwise match): transitivity must still unite all three. The
     // duplicate name checks n_entities; the gadget is an isolated name.
@@ -330,7 +330,7 @@ class ClinicalSpec extends SparkSpec {
 
   test("text_token_gini is exact integer micro-units of 1 - sum(p^2)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("gini").toString
+    val dir = tempDir("gini").toString
     Seq((1L, "a a b b"), (2L, "a b c d"), (3L, "a a a a"))
       .toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),

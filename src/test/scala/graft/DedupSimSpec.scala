@@ -1159,10 +1159,10 @@ class DedupSimSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val plain = SimOps.topKBruteForce(vecs, col("vec_id") < 3, 4)
       .collect().toSeq
-    val dataDir = java.nio.file.Files.createTempDirectory("bruteg").toString
+    val dataDir = tempDir("bruteg").toString
     vecs.write.parquet(s"$dataDir/emb")
     val vP = spark.read.parquet(s"$dataDir/emb")
-    val cacheDir = java.nio.file.Files.createTempDirectory("brutec").toString
+    val cacheDir = tempDir("brutec").toString
     def entries(): Seq[String] =
       Option(new java.io.File(cacheDir).listFiles()).toSeq.flatten
         .map(_.getName).filter(_.startsWith("brute_")).toSeq
@@ -1197,7 +1197,7 @@ class DedupSimSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     def inline(v: org.apache.spark.sql.DataFrame) =
       SimOps.topKBruteForce(v, col("vec_id") < 3, 4).collect().toSeq
-    val dataDir = Files.createTempDirectory("artg")
+    val dataDir = tempDir("artg")
     val corpus = dataDir.resolve("emb.parquet")
     // A one-file table, stored the way the sf* test data is.
     def writeCorpus(v: org.apache.spark.sql.DataFrame): Unit = {
@@ -1207,7 +1207,7 @@ class DedupSimSpec extends SparkSpec {
         .find(f => f.getName.startsWith("part-")).get
       Files.move(part.toPath, corpus, StandardCopyOption.REPLACE_EXISTING)
     }
-    val cacheDir = Files.createTempDirectory("artc").toString
+    val cacheDir = tempDir("artc").toString
     def entries(): Seq[String] =
       Option(new java.io.File(cacheDir).listFiles()).toSeq.flatten
         .map(_.getName).filter(_.startsWith("brute_")).sorted.toSeq
@@ -1254,11 +1254,11 @@ class DedupSimSpec extends SparkSpec {
       .collect().toSeq
     val unIfub = GraphOps.diameterIfub(nodes, edges, maxDepth = 12,
       fringeLevels = 3).collect().toSeq
-    val cacheDir = java.nio.file.Files.createTempDirectory("bfsc").toString
+    val cacheDir = tempDir("bfsc").toString
     def cacheDirs(): Seq[String] =
       Option(new java.io.File(cacheDir).listFiles()).toSeq.flatten
         .map(_.getName).filter(_.startsWith("bfs_")).sorted.toSeq
-    val dataDir = java.nio.file.Files.createTempDirectory("bfsg").toString
+    val dataDir = tempDir("bfsg").toString
     nodes.write.parquet(s"$dataDir/nodes")
     edges.write.parquet(s"$dataDir/edges")
     val nP = spark.read.parquet(s"$dataDir/nodes")

@@ -97,7 +97,7 @@ class HttpBulkClientSpec extends SparkSpec {
       val parsed = EgvStreams.parseEgvs(
           in.toDF().toDF("key", "value", "timestamp"))
         .select(col("key"), col("value"), col("systemTime"))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-http-ckpt").toString
+      val ckpt = tempDir("graft-http-ckpt").toString
       def start() = parsed.writeStream
         .foreachBatch(IdempotentBulkSink.writeBatch(
           new HttpBulkClient(es.endpoint, "egvs"),

@@ -185,7 +185,7 @@ class PlanSpec extends SparkSpec {
   test("materialized pair table is scanned, not recomputed, on reuse") {
     import graft.ops.DedupOps
     import graft.queries.DedupQueries
-    val dir = java.nio.file.Files.createTempDirectory("graft-pairs").toString
+    val dir = tempDir("graft-pairs").toString
     spark.conf.set("graft.pairs.dir", dir)
     try {
       val docs = Tables.documents(spark, d)
@@ -212,7 +212,7 @@ class PlanSpec extends SparkSpec {
     val q = Catalog.queries("mm_warc_records")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().toSeq.map(_.toString).sorted
-    val dir = java.nio.file.Files.createTempDirectory("graft-fixture").toString
+    val dir = tempDir("graft-fixture").toString
     def entries(): Seq[String] =
       Option(new java.io.File(dir).listFiles()).toSeq.flatten
         .map(_.getName).filter(_.startsWith("fixture_")).toSeq
@@ -238,7 +238,7 @@ class PlanSpec extends SparkSpec {
       "coarse-cell build across the ivf and ivfpq arms") {
     import graft.ops.SimOps
     import graft.queries.SimQueries._
-    val dir = java.nio.file.Files.createTempDirectory("graft-knn").toString
+    val dir = tempDir("graft-knn").toString
     spark.conf.set("graft.knn.dir", dir)
     try {
       // First call materializes the degree-10 edge table the NSW arm
@@ -562,10 +562,10 @@ class PlanSpec extends SparkSpec {
       assert(jobs.containsKey(g + "-marker"), "marker job never reached the listener")
       (out, Option(jobs.get(g)).map(_.intValue).getOrElse(0))
     }
-    val dir = Files.createTempDirectory("memo").toString
+    val dir = tempDir("memo").toString
     // A single-file table, as the catalog reads (TESTDATA.md).
     def writeTable(df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = Files.createTempDirectory("memo-src").toFile
+      val tmp = tempDir("memo-src").toFile
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = tmp.listFiles().find(f =>
         f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get

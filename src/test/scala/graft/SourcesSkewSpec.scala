@@ -91,7 +91,7 @@ class SourcesSkewSpec extends SparkSpec {
 
   test("json ingestion captures corrupt records instead of dropping or failing") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val dir = tempDir("graft-json").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "in.json"),
       """{"id": 1, "v": "ok"}
         |{"id": 2 BROKEN
@@ -111,7 +111,7 @@ class SourcesSkewSpec extends SparkSpec {
 
   test("compactParquet collapses a many-small-files dir, preserving data") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = tempDir("graft-compact").toString + "/t"
     (0L until 10000L).toDF("id").repartition(64).write.parquet(dir)
     def partFiles = new java.io.File(dir).listFiles()
       .count(f => f.getName.startsWith("part-"))
@@ -128,7 +128,7 @@ class SourcesSkewSpec extends SparkSpec {
     // Crash window: previous run died after moving the live dir aside —
     // the live path is missing, data sits under .compact.old. A re-run
     // must restore it and complete.
-    val base = java.nio.file.Files.createTempDirectory("graft-compact-rec").toString
+    val base = tempDir("graft-compact-rec").toString
     val dir = base + "/t"
     (0L until 1000L).toDF("id").repartition(8).write.parquet(dir)
     val before = spark.read.parquet(dir).agg(sum("id")).collect()(0).getLong(0)
@@ -165,7 +165,7 @@ class SourcesSkewSpec extends SparkSpec {
   }
 
   test("orc round-trips documents with predicate pushdown at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString + "/t"
+    val dir = tempDir("graft-orc").toString + "/t"
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     docs.write.orc(dir)
     val back = spark.read.orc(dir).filter(org.apache.spark.sql.functions.col("n_chars") > 300)
@@ -181,7 +181,7 @@ class SourcesSkewSpec extends SparkSpec {
 
   test("schema evolution: mergeSchema unions parquet generations, old rows null-fill") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evo").toString + "/t"
+    val dir = tempDir("graft-evo").toString + "/t"
     // Generation 1: (id, a). Generation 2 adds column b — the additive
     // evolution a long-lived 100 TB table actually undergoes.
     Seq((1L, "x"), (2L, "y")).toDF("id", "a").write.parquet(dir)

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
@@ -13,6 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.Schemas
 import graft.ops.EgvOps
+import graft.plans.BoundStageExec
 import graft.streaming.{BulkClient, EgvStreams, IdempotentBulkSink, InMemoryBulkClient,
   LocalCheckpointFileManager, StatefulOps}
 
@@ -40,6 +43,10 @@ class StreamingSpec extends SparkSpec {
 
   /** Kafka-source-shaped record: (key, value, timestamp). */
   case class KafkaRec(key: String, value: String, timestamp: Timestamp)
+
+  /** [[KafkaRec]] with the `partition` column a Kafka source also
+    * produces, which no topology reads. */
+  case class PartitionedKafkaRec(key: String, value: String, timestamp: Timestamp, partition: Int)
 
   private def egvJson(value: Int, systemTime: String): String =
     s"""{"systemTime":"$systemTime","displayTime":"$systemTime","value":$value,
@@ -75,64 +82,127 @@ class StreamingSpec extends SparkSpec {
       .toDF("range_id", "start_sec", "end_sec", "lower_bound", "upper_bound")
   }
 
+  /** The physical plan of `q`'s last micro-batch. */
+  private def lastPlan(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+
   test("categorize-lookup topology end-to-end reproduces reference asserts") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val recs = Seq(
       KafkaRec("robert", egvJson(75, "2020-11-02T02:00:00"), new Timestamp(0)),
       KafkaRec("robert", egvJson(100, "2020-11-02T12:00:00"), new Timestamp(1)),
       KafkaRec("robert", egvJson(265, "2020-11-02T19:00:00"), new Timestamp(2)),
       KafkaRec("robert", egvJson(150, "2020-11-02T23:30:00"), new Timestamp(3)),
       // No time of day: no range holds it, so it is dropped.
-      KafkaRec("robert", """{"systemTime":null,"value":120}""", new Timestamp(4)))
-    // Runs the topology as a stream; returns its rows, its schema as
-    // (name, type, nullable) in column order, and the last batch's
-    // executed plan.
-    def streamed(ranges: org.apache.spark.sql.DataFrame, name: String) = {
-      val in = MemoryStream[KafkaRec]
+      KafkaRec("robert", """{"systemTime":null,"value":120}""", new Timestamp(4)),
+      // Not JSON: the decode yields nulls, and the row is dropped.
+      KafkaRec("robert", """{"systemTime":"2020-11-02T03:00:00","value":""", new Timestamp(5)),
+      // 21599 s and 21600 s: the last second of range 1, the first of 2.
+      KafkaRec("ana", egvJson(150, "2020-11-02T05:59:59"), new Timestamp(6)),
+      KafkaRec("ana", egvJson(150, "2020-11-02T06:00:00"), new Timestamp(7)))
+    // Runs the topology as a stream in `s`, an empty batch first; returns
+    // its rows, its schema as (name, type, nullable) in column order, and
+    // the last batch's executed plan.
+    def streamed(s: org.apache.spark.sql.SparkSession, ranges: org.apache.spark.sql.DataFrame,
+                 name: String) = {
+      val in = MemoryStream[KafkaRec](s)
       val out = EgvStreams.categorizeLookupTopology(EgvStreams.parseEgvs(in.toDF()), ranges)
       val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+      in.addData(Nil)
+      q.processAllAvailable()
       in.addData(recs: _*)
       q.processAllAvailable(); q.stop()
-      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-        .lastExecution.executedPlan.toString
-      (spark.table(name).collect().map(_.toSeq).toSeq,
-        out.schema.map(f => (f.name, f.dataType, f.nullable)), plan)
+      val batches = q.recentProgress.map(p => (p.batchId, p.numInputRows)).toSeq
+      assert(batches.contains((0L, 0L)) && batches.last === ((1L, recs.size.toLong)),
+        s"$name: $batches")
+      (s.table(name).collect().map(_.toSeq).toSeq,
+        out.schema.map(f => (f.name, f.dataType, f.nullable)), lastPlan(q))
     }
-    def joined(ranges: org.apache.spark.sql.DataFrame) = {
+    def joined(s: org.apache.spark.sql.SparkSession, ranges: org.apache.spark.sql.DataFrame) = {
       val out = EgvOps.categorizeWithLookup(
-        EgvStreams.parseEgvs(recs.map(r => (r.key, r.value, r.timestamp))
+        EgvStreams.parseEgvs(s.createDataFrame(recs.map(r => (r.key, r.value, r.timestamp)))
           .toDF("key", "value", "timestamp")).withColumn("ts", col("systemTs")), ranges)
       (out.collect().map(_.toSeq).toSeq, out.schema.map(f => (f.name, f.dataType, f.nullable)))
     }
     def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
 
-    // Driver-local disjoint ranges are inlined, so no batch broadcasts; the
-    // rows, names, types, nullability and column order equal the broadcast
-    // join's, also with a null-start range row (never matches) and with no
-    // ranges at all.
-    for ((name, ranges) <- Seq(
-        "categorized" -> fixtureRangesDf,
-        "categorized_null_start" -> rangesDf((1, Some(0), 43199, 80, 150),
-          (2, None, 86399, 70, 180), (3, Some(43200), 86399, 90, 140)),
-        "categorized_empty" -> rangesDf())) {
-      val (sRows, sSchema, sPlan) = streamed(ranges, name)
-      val (jRows, jSchema) = joined(ranges)
+    // Driver-local disjoint ranges are inlined and the stage is planned
+    // once, so no batch broadcasts or generates code; the rows, names,
+    // types, nullability and column order equal the broadcast join's,
+    // also with a null-start range row (never matches), with no ranges at
+    // all, and in a session whose time zone is not UTC.
+    val kolkata = spark.newSession()
+    kolkata.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    for ((s, name, ranges) <- Seq(
+        (spark, "categorized", fixtureRangesDf),
+        (spark, "categorized_null_start", rangesDf((1, Some(0), 43199, 80, 150),
+          (2, None, 86399, 70, 180), (3, Some(43200), 86399, 90, 140))),
+        (spark, "categorized_empty", rangesDf()),
+        (kolkata, "categorized_kolkata", kolkata.createDataFrame(Schemas.fixtureRanges
+          .map(r => (r.rangeId, r.startSec, r.endSec, r.lowerBound, r.upperBound)))
+          .toDF("range_id", "start_sec", "end_sec", "lower_bound", "upper_bound")))) {
+      val (sRows, sSchema, sPlan) = streamed(s, ranges, name)
+      val (jRows, jSchema) = joined(s, ranges)
       assert(sSchema === jSchema, name)
       assert(sorted(sRows) === sorted(jRows), name)
-      assert(!sPlan.contains("BroadcastExchange") && !sPlan.contains("Join"), s"$name:\n$sPlan")
+      assert(sPlan.collectFirst { case b: BoundStageExec => b }.nonEmpty, s"$name:\n$sPlan")
+      assert(!sPlan.toString.contains("BroadcastExchange") && !sPlan.toString.contains("Join"),
+        s"$name:\n$sPlan")
     }
-    val got = spark.table("categorized").select("value", "range_id", "in_range")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2))).toSet
-    assert(got === Set((75, 1, "false"), (100, 2, "true"), (265, 2, "false"), (150, 3, "true")))
+    val expected = Set((75, 1, "false"), (100, 2, "true"), (265, 2, "false"), (150, 3, "true"),
+      (150, 1, "true"), (150, 2, "true"))
+    for (s <- Seq(spark, kolkata)) {
+      val got = s.table(if (s eq spark) "categorized" else "categorized_kolkata")
+        .select("value", "range_id", "in_range")
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2))).toSet
+      assert(got === expected)
+    }
+    assert(spark.table("categorized").filter(col("key") === "ana")
+      .select("systemTime", "range_id").as[(String, Int)].collect().sorted.toSeq ===
+      Seq("2020-11-02T05:59:59" -> 1, "2020-11-02T06:00:00" -> 2))
 
     // Overlapping ranges keep the join: an event inside both emits both.
     val overlapping = rangesDf((1, Some(0), 43199, 80, 150), (2, Some(0), 86399, 70, 180))
-    val (oRows, _, oPlan) = streamed(overlapping, "categorized_overlap")
-    assert(oPlan.contains("BroadcastExchange"), oPlan)
-    assert(sorted(oRows) === sorted(joined(overlapping)._1))
+    val (oRows, _, oPlan) = streamed(spark, overlapping, "categorized_overlap")
+    assert(oPlan.toString.contains("BroadcastExchange"), oPlan)
+    assert(sorted(oRows) === sorted(joined(spark, overlapping)._1))
     assert(spark.table("categorized_overlap").filter(col("value") === 75)
       .select("range_id").as[Int].collect().sorted.toSeq === Seq(1, 2))
+  }
+
+  test("a stateless topology runs as one bound stage over its source: no operator of it is " +
+    "planned or code-generated per batch") {
+    import spark.implicits._
+    type Topology = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    for ((name, topology) <- Seq[(String, Topology)](
+        "bound_high" -> EgvStreams.filterHighTopology,
+        "bound_simple" -> EgvStreams.categorizeSimpleTopology,
+        "bound_lookup" -> (EgvStreams.categorizeLookupTopology(_, fixtureRangesDf)))) {
+      val in = MemoryStream[PartitionedKafkaRec](spark)
+      val q = topology(EgvStreams.parseEgvs(in.toDF()))
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      for (v <- Seq(65, 265)) {
+        in.addData(PartitionedKafkaRec("robert", egvJson(v, "2020-11-02T02:00:00"),
+          new Timestamp(0), 7))
+        q.processAllAvailable()
+      }
+      q.stop()
+      val plan = lastPlan(q)
+      val stage = plan.collect { case b: BoundStageExec => b }
+      assert(stage.size === 1, s"$name:\n$plan")
+      assert(stage.head.child.isInstanceOf[MicroBatchScanExec], s"$name:\n$plan")
+      assert(plan.collect {
+        case p @ (_: WholeStageCodegenExec | _: GenerateExec | _: ProjectExec | _: FilterExec) => p
+      }.isEmpty, s"$name:\n$plan")
+      assert(!stage.head.treeString.contains("!"), stage.head.treeString)
+      // The decode at the bottom reads three of the source's four columns,
+      // so the stage projects its rows first; filter-high's filter is
+      // pushed below the decode and passes every column on.
+      assert(stage.head.input.map(_.name) === (if (name == "bound_high")
+        Seq("key", "value", "timestamp", "partition") else Seq("key", "value", "timestamp")), name)
+      assert(spark.table(name).select("value").as[Int].collect().sorted.toSeq ===
+        (if (name == "bound_high") Seq(265) else Seq(65, 265)), name)
+    }
   }
 
   /** Three micro-batches of EGVs for the checkpointed lookup stream. */
@@ -154,7 +224,7 @@ class StreamingSpec extends SparkSpec {
       .start()
 
   private def newCheckpoint(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def storeSnapshot(): Map[String, String] = {
     import scala.jdk.CollectionConverters._
@@ -201,6 +271,8 @@ class StreamingSpec extends SparkSpec {
         q.processAllAvailable()
       }
       q.stop()
+      // The restarted query runs the stage planned once, as the first did.
+      assert(lastPlan(q).collectFirst { case b: BoundStageExec => b }.nonEmpty, lastPlan(q))
       (storeSnapshot(), ckpt)
     }
     val (uninterrupted, _) = run(None)
@@ -274,7 +346,7 @@ class StreamingSpec extends SparkSpec {
 
   test("LocalCheckpointFileManager: no-overwrite commit of an existing file fails and keeps " +
     "its bytes, cancel leaves no file, list matches Spark's default manager") {
-    val dir = Files.createTempDirectory("graft-cfm")
+    val dir = tempDir("graft-cfm")
     val root = new Path(dir.toString)
     val conf = spark.sessionState.newHadoopConf()
     val ours = new LocalCheckpointFileManager(root, conf)
@@ -373,7 +445,7 @@ class StreamingSpec extends SparkSpec {
       Seq("offsets", "commits").flatMap(logFiles(ckpt, _)).count(_.endsWith(".crc"))
 
     InMemoryBulkClient.store.clear()
-    val full = Files.createTempDirectory("graft-compat-src")
+    val full = tempDir("graft-compat-src")
     files.indices.foreach(addFile(full, _))
     runOn(spark, full, newCheckpoint("graft-compat-ckpt"))
     val uninterrupted = storeSnapshot()
@@ -383,7 +455,7 @@ class StreamingSpec extends SparkSpec {
     assert(bare.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
     for ((first, second) <- Seq(bare -> spark, spark -> bare)) {
       InMemoryBulkClient.store.clear()
-      val src = Files.createTempDirectory("graft-compat-src")
+      val src = tempDir("graft-compat-src")
       val ckpt = newCheckpoint("graft-compat-ckpt")
       addFile(src, 0); addFile(src, 1)
       runOn(first, src, ckpt)
@@ -532,7 +604,7 @@ class StreamingSpec extends SparkSpec {
     val parsed = EgvStreams.parseEgvs(in.toDF())
       .select(col("key"), col("value"), col("systemTime"))
       .repartition(4) // force multi-partition executor-side writes
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dist-ckpt").toString
+    val ckpt = tempDir("graft-dist-ckpt").toString
     val q = parsed.writeStream
       .foreachBatch(IdempotentBulkSink.writeBatchDistributed(
         () => InMemoryBulkClient, Seq("key", "systemTime"), bulkSize = 2) _)
@@ -709,7 +781,7 @@ class StreamingSpec extends SparkSpec {
       changelog += ((r.rangeId, r.startSec, r.endSec, r.lowerBound, r.upperBound, i.toLong))
     }
     val results = scala.collection.mutable.ArrayBuffer[(Long, Int, String)]()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ktable-ckpt").toString
+    val ckpt = tempDir("graft-ktable-ckpt").toString
     val q = EgvStreams.parseEgvs(in.toDF()).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val snapshot = EgvStreams.latestByKeyBatch(
@@ -739,7 +811,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     // The ingestion-rate knob a 100 TB backfill needs: without a per-batch
     // cap, the first trigger of a large directory becomes one giant batch.
-    val dir = java.nio.file.Files.createTempDirectory("graft-backfill").toString
+    val dir = tempDir("graft-backfill").toString
     for (i <- 1 to 3)
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"f$i.json"),
         s"""{"id": $i}\n""".getBytes("UTF-8"))
@@ -786,7 +858,7 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[KafkaRec]
     val parsed = EgvStreams.parseEgvs(in.toDF())
       .select(col("key"), col("value"), col("systemTime"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sink-ckpt").toString
+    val ckpt = tempDir("graft-sink-ckpt").toString
     def start() = parsed.writeStream
       .foreachBatch(IdempotentBulkSink.writeBatch(
         InMemoryBulkClient, Seq("key", "systemTime")) _)
@@ -1214,7 +1286,7 @@ class StreamingSpec extends SparkSpec {
     // The backfill pattern: reprocess a historical table through the
     // SAME streaming topology, rate-limited by maxFilesPerTrigger, and
     // terminate when caught up — no manual stop, no always-on cluster.
-    val dir = java.nio.file.Files.createTempDirectory("graft-avnow").toString
+    val dir = tempDir("graft-avnow").toString
     (0 until 4).foreach { i =>
       Seq.tabulate(25)(j => (i * 25L + j, s"v${i * 25 + j}"))
         .toDF("id", "v").coalesce(1).write.parquet(s"$dir/in/batch$i")
@@ -1268,7 +1340,7 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "keep").collect()
       .map(r => (r.getLong(0), r.getBoolean(1))).toSet
     val in = MemoryStream[(Long, String, String, String, Long)]
-    val tmp = java.nio.file.Files.createTempDirectory("graft-gq").toString
+    val tmp = tempDir("graft-gq").toString
     // Re-derive the same plan over the stream by writing the micro-batch
     // through the identical rule expressions (QueryDef.run needs a table
     // dir; the rule set lives in one place, so drive it via a parquet
