@@ -1,51 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** U1 — the reference's "UDF with keyed state" capability
+/** Streaming twins of catalog batch queries. Each operator here has a
+  * gated batch twin, and a `StreamingSpec` parity test runs it through
+  * `restartEquivalent`: uninterrupted on the default state store, then
+  * on RocksDB with one batch failed and replayed from the checkpoint,
+  * to the same per-batch output.
+  *
+  * U1 — the reference's "UDF with keyed state" capability
   * (EgvTransformer.java:20-90, a ValueTransformer holding a state store),
   * generalized the Spark way: `flatMapGroupsWithState` over a typed
-  * KeyValueGroupedDataset.
-  *
-  * The concrete operator: per-user glucose delta tracking — for each
-  * reading emit the previous reading's value and the delta, the stateful
-  * sibling of `Egv.trendRate` (Egv.java:11). State is one row per key
-  * (bounded), watermark-safe, and identical in batch tests via the
-  * MemoryStream harness.
+  * KeyValueGroupedDataset. Its Dexcom-native instance is
+  * [[streamingTrendArrows]]: per-user state is the last reading, and each
+  * arrival emits its rate of change against it (`Egv.trendRate`,
+  * Egv.java:11) with the batch `ref_trend_arrows` classification.
   */
 object StatefulOps {
-
-  case class Reading(userId: String, ts: java.sql.Timestamp, value: Int)
-  case class ReadingDelta(userId: String, ts: java.sql.Timestamp, value: Int,
-                          prevValue: Option[Int], delta: Option[Int])
-  case class LastSeen(ts: Long, value: Int)
-
-  /** Emits one ReadingDelta per input reading, ordered by event time
-    * within each (group, micro-batch). */
-  def deltasPerUser(readings: Dataset[Reading]): Dataset[ReadingDelta] = {
-    import readings.sparkSession.implicits._
-    readings
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[LastSeen, ReadingDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: String, rows: Iterator[Reading], state: GroupState[LastSeen]) =>
-          // Sort within the micro-batch: Kafka Streams sees offset order;
-          // Structured Streaming makes no intra-batch order promise, so
-          // event-time order is the well-defined contract.
-          val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.value))
-          val out = scala.collection.mutable.ArrayBuffer.empty[ReadingDelta]
-          var last = state.getOption
-          for (r <- sorted) {
-            out += ReadingDelta(userId, r.ts, r.value,
-              last.map(_.value), last.map(l => r.value - l.value))
-            last = Some(LastSeen(r.ts.getTime, r.value))
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
-  }
 
   case class KeyedEvent(key: String, ts: java.sql.Timestamp, eventId: Long)
   case class LastTs(sec: Long)
@@ -73,83 +45,6 @@ object StatefulOps {
             last = Some(sec) // last SEEN, kept or not — lag() semantics
           }
           last.foreach(s => state.update(LastTs(s)))
-          out.iterator
-      }
-  }
-
-  /** The same operator on the arbitrary-state v2 API
-    * (`transformWithState` + `StatefulProcessor`, Spark 4.x): typed
-    * per-key `ValueState` handles with optional TTL replace the single
-    * `GroupState` blob — the engine-current form of U1. Semantics are
-    * identical to [[deltasPerUser]]; `StreamingSpec` asserts both paths
-    * emit the same rows across micro-batches.
-    */
-  class DeltaProcessor extends StatefulProcessor[String, Reading, ReadingDelta] {
-    @transient private var last: ValueState[LastSeen] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[LastSeen](
-        "last", Encoders.product[LastSeen], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Reading],
-                                 timers: TimerValues): Iterator[ReadingDelta] = {
-      val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.value))
-      val out = scala.collection.mutable.ArrayBuffer.empty[ReadingDelta]
-      var prev = if (last.exists()) Some(last.get()) else None
-      for (r <- sorted) {
-        out += ReadingDelta(key, r.ts, r.value,
-          prev.map(_.value), prev.map(l => r.value - l.value))
-        prev = Some(LastSeen(r.ts.getTime, r.value))
-      }
-      prev.foreach(last.update)
-      out.iterator
-    }
-  }
-
-  /** [[deltasPerUser]] via `transformWithState` (state API v2). */
-  def deltasPerUserV2(readings: Dataset[Reading]): Dataset[ReadingDelta] = {
-    import readings.sparkSession.implicits._
-    readings
-      .groupByKey(_.userId)
-      .transformWithState(new DeltaProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  case class RunningZ(userId: String, ts: java.sql.Timestamp, value: Int,
-                      n: Long, z: Option[Double])
-  case class Moments(n: Long, mean: Double, m2: Double)
-
-  /** Streaming per-key running z-score via Welford's online algorithm —
-    * the live-alerting twin of the batch `ref_anomaly_zscore` (which
-    * scores against FINAL per-user stats): each reading is scored
-    * against the stats of everything seen so far, then folded in. State
-    * is three doubles per key, O(1) forever; Welford (not naive Σx/Σx²)
-    * keeps m2 numerically stable over unbounded streams. z is None
-    * until a key has ≥ 2 prior readings (sample stddev undefined/zero).
-    */
-  def runningZscore(readings: Dataset[Reading]): Dataset[RunningZ] = {
-    import readings.sparkSession.implicits._
-    readings
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[Moments, RunningZ](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: String, rows: Iterator[Reading], state: GroupState[Moments]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.value))
-          val out = scala.collection.mutable.ArrayBuffer.empty[RunningZ]
-          var m = state.getOption.getOrElse(Moments(0L, 0d, 0d))
-          for (r <- sorted) {
-            val z =
-              if (m.n >= 2) {
-                val sd = math.sqrt(m.m2 / (m.n - 1))
-                if (sd > 0) Some((r.value - m.mean) / sd) else None
-              } else None
-            out += RunningZ(userId, r.ts, r.value, m.n, z)
-            val n1 = m.n + 1
-            val d = r.value - m.mean
-            val mean1 = m.mean + d / n1
-            m = Moments(n1, mean1, m.m2 + d * (r.value - mean1))
-          }
-          state.update(m)
           out.iterator
       }
   }
@@ -717,20 +612,6 @@ object StatefulOps {
   case class IdEvent(grp: String, id: Long)
   case class DistinctEst(grp: String, est: Long)
 
-  /** Streaming twin of the batch HLL cardinality roll-up
-    * (`q_hll_partial_merge`): ONE DataSketches HLL sketch per group in
-    * keyed state — the "materialize per-partition sketches once, merge
-    * forever" pattern run live. Each micro-batch folds its ids into the
-    * stored sketch (same lgConfigK and HLL_8 target type as Spark's
-    * `hll_sketch_agg`, verified estimate-equal in `StreamingSpec`) and
-    * emits the refreshed estimate (Update semantics).
-    *
-    * State is the sketch's updatable byte image — bounded by lgConfigK
-    * (~2^lgK bytes) FOREVER, regardless of stream cardinality; HLL
-    * updates are set-semantics (order- and duplicate-insensitive), so
-    * replayed ids under at-least-once delivery cannot move the estimate,
-    * and any micro-batching of the same id set converges to the same
-    * final state. */
   case class GlucoseReading(userId: Long, sec: Long, eventId: Long,
                             value: Double)
   case class TirState(lastSec: Long, lastEventId: Long, lastValue: Double,
@@ -869,6 +750,20 @@ object StatefulOps {
       }
   }
 
+  /** Streaming twin of the batch HLL cardinality roll-up
+    * (`q_hll_partial_merge`): ONE DataSketches HLL sketch per group in
+    * keyed state — the "materialize per-partition sketches once, merge
+    * forever" pattern run live. Each micro-batch folds its ids into the
+    * stored sketch (same lgConfigK and HLL_8 target type as Spark's
+    * `hll_sketch_agg`, verified estimate-equal in `StreamingSpec`) and
+    * emits the refreshed estimate (Update semantics).
+    *
+    * State is the sketch's updatable byte image — bounded by lgConfigK
+    * (~2^lgK bytes) FOREVER, regardless of stream cardinality; HLL
+    * updates are set-semantics (order- and duplicate-insensitive), so
+    * replayed ids under at-least-once delivery cannot move the estimate,
+    * and any micro-batching of the same id set converges to the same
+    * final state. */
   def streamingDistinct(events: Dataset[IdEvent],
                         lgK: Int): Dataset[DistinctEst] = {
     import events.sparkSession.implicits._
@@ -891,12 +786,11 @@ object StatefulOps {
   /** Trained Stupid-Backoff count tables as a driver/broadcast model:
     * the serving form of `TextOps.stupidBackoff`'s three hash-aggs —
     * counts, not probabilities, so the scorer reproduces the batch
-    * gate's DECIMAL-floor divisions exactly at lookup time. Size is
-    * bounded by the train slice's distinct n-grams (the shard Brants
-    * et al. serve from memory); past any broadcast budget the
-    * DISTRIBUTED path [[streamingLmScoreSharded]] serves the same
-    * rows with the tables never collected — [[sbServe]] dispatches
-    * on size. */
+    * gate's DECIMAL-floor divisions exactly at lookup time. Its size
+    * is the train slice's distinct n-grams (the shard Brants et al.
+    * serve from memory), collected to the driver and broadcast whole,
+    * so a train slice's tables must fit in one JVM ([[trainSbModel]]
+    * gives the measured sizes). */
   case class SbModel(uni: Map[String, Long],
                      bi: Map[(String, String), Long],
                      tri: Map[(String, String, String), Long],
@@ -911,6 +805,12 @@ object StatefulOps {
     val t = docs.filter(trainPred)
       .select(graft.ops.TextOps.tokens(col("text")).as("t"))
       .filter(col("t").isNotNull)
+    // Each collect brings one table of the train slice's distinct
+    // n-grams to the driver. On the lang = 'en' slice that is 31
+    // unigrams, 911 bigrams and 8,136 trigrams at sf0.001 (193 train
+    // docs), and 31, 907 and 9,096 at sf0.01 (218 train docs). The
+    // fixture's 31-token vocabulary caps its trigrams at 31³; real text
+    // grows the tables with the train slice's vocabulary.
     val uni = t.select(explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -951,7 +851,7 @@ object StatefulOps {
   def streamingLmScore(docs: Dataset[LmDoc], model: SbModel)
   : Dataset[LmScoreRow] = {
     import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(model)
+    val bc = docs.sparkSession.sparkContext.broadcast(model) // sized as trainSbModel states
     docs.mapPartitions { rows =>
       val m = bc.value
       rows.map { d =>
@@ -1003,11 +903,10 @@ object StatefulOps {
     * per-context totals c(w1·) + distinct continuations N1+(w1·), and
     * the continuation probability P_cont(w2) pre-floored to micro
     * (N1+(·w2)·10⁶ div B — a per-w2 constant, so pre-flooring it is
-    * exactly what the batch gate joins in). Bounded by the train
-    * slice's distinct bigrams; past any broadcast budget the
-    * DISTRIBUTED path [[streamingKnScoreSharded]] serves the same
-    * rows with the tables never collected — [[knServe]] dispatches
-    * on size. */
+    * exactly what the batch gate joins in). Its size is the train
+    * slice's distinct bigrams plus one entry per context and per
+    * continuation, collected to the driver and broadcast whole
+    * ([[trainKnModel]] gives the measured sizes). */
   case class KnModel(bi: Map[(String, String), Long],
                      ctx: Map[String, (Long, Long)],
                      pcont: Map[String, Long])
@@ -1017,6 +916,10 @@ object StatefulOps {
   def trainKnModel(docs: org.apache.spark.sql.DataFrame,
                    trainPred: org.apache.spark.sql.Column): KnModel = {
     import org.apache.spark.sql.functions._
+    // The one collect brings the train slice's distinct bigrams to the
+    // driver: 911 at sf0.001 and 907 at sf0.01 on the lang = 'en'
+    // slice; `ctx` and `pcont` derive from them (31 and 31 entries at
+    // sf0.001, 30 and 31 at sf0.01).
     val bg = docs.filter(trainPred)
       .select(graft.ops.TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -1053,7 +956,7 @@ object StatefulOps {
   def streamingKnScore(docs: Dataset[LmDoc], model: KnModel)
   : Dataset[KnScoreRow] = {
     import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(model)
+    val bc = docs.sparkSession.sparkContext.broadcast(model) // sized as trainKnModel states
     val d = 750000L
     docs.mapPartitions { rows =>
       val m = bc.value
@@ -1096,260 +999,6 @@ object StatefulOps {
     }
   }
 
-  // ---- Sharded LM serving (the 100 TB fallback) -------------------------
-  //
-  // The broadcast models above are the Brants in-memory shard — correct
-  // while the train slice's distinct n-grams fit a driver Map. A 100 TB
-  // corpus vocabulary does NOT fit a broadcast (round-10 verdict #2), so
-  // past a size threshold the count tables must stay DISTRIBUTED and
-  // scoring becomes stream-static equi-joins (the decontamination
-  // broadcast pattern in reverse): explode the arriving doc to n-gram
-  // occurrences, LEFT-join the static tables, replay the identical
-  // integer ladder in COLUMNS (DECIMAL(38,0) products — the batch gate's
-  // own expressions), and fold per doc. The fold runs as
-  // flatMapGroupsWithState with NO retained state: a doc's occurrence
-  // rows all derive from its single input row, so they co-live in one
-  // trigger and the group emits exactly once.
-
-  /** Distributed [[KnModel]]: the same three count tables as
-    * DataFrames — bi(w1, w2, c12), ctx(w1, ctxc, nfollow),
-    * pcont(w2, pcont) — localCheckpoint'd so serving joins read
-    * settled leaves instead of re-running training per micro-batch. */
-  case class KnTables(bi: org.apache.spark.sql.DataFrame,
-                      ctx: org.apache.spark.sql.DataFrame,
-                      pcont: org.apache.spark.sql.DataFrame)
-
-  /** One batch pass over the train slice → [[KnTables]]. Identical
-    * arithmetic to [[trainKnModel]] (the spec pins collect-parity);
-    * only the bounded distinct-bigram TOTAL ever reaches the driver.
-    * Each table is REPARTITIONED BY ITS SERVING JOIN KEY before the
-    * checkpoint (localCheckpoint preserves outputPartitioning): the
-    * per-micro-batch stream-static joins then shuffle only the small
-    * arriving slice — the big static side settles once at train
-    * time, never once per trigger. */
-  def trainKnTables(docs: org.apache.spark.sql.DataFrame,
-                    trainPred: org.apache.spark.sql.Column): KnTables = {
-    import org.apache.spark.sql.functions._
-    val bc = docs.filter(trainPred)
-      .select(graft.ops.TextOps.tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
-           (a, b) -> struct(a AS w1, b AS w2))""")).as("b"))
-      .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .agg(count(lit(1)).as("c12"))
-      .repartition(col("w1"), col("w2"))
-      .localCheckpoint()
-    val ctx = bc.groupBy(col("w1"))
-      .agg(sum(col("c12")).as("ctxc"), count(lit(1)).as("nfollow"))
-      .repartition(col("w1"))
-      .localCheckpoint()
-    val bTot = bc.count()
-    val pcont = bc.groupBy(col("w2")).agg(count(lit(1)).as("nprec"))
-      .select(col("w2"), expr(
-        s"CAST(CAST(nprec AS DECIMAL(38,0)) * 1000000 div $bTot AS BIGINT)")
-        .as("pcont"))
-      .repartition(col("w2"))
-      .localCheckpoint()
-    KnTables(bc, ctx, pcont)
-  }
-
-  /** Sharded streaming KN scorer — row-identical to
-    * [[streamingKnScore]] with the tables never collected: per-bigram
-    * p_micro/level via stream-static LEFT joins and the batch gate's
-    * DECIMAL(38,0) column ladder, folded per doc by a stateless
-    * flatMapGroupsWithState. Docs too short to form a bigram ride a
-    * separate union branch straight to the −1 sentinel row. */
-  def streamingKnScoreSharded(docs: Dataset[LmDoc], t: KnTables)
-  : Dataset[KnScoreRow] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
-    val d = 750000L
-    val base = docs.toDF()
-      .select(col("docId"), graft.ops.TextOps.tokens(col("text")).as("t"))
-    val shorts = base.filter(col("t").isNull || size(col("t")) < 2)
-      .select(col("docId"), lit(0L).as("nBigrams"), lit(0L).as("nKnHit"),
-        lit(0L).as("nContBack"), lit(0L).as("nOov"),
-        lit(-1.0).as("knScore"), lit(true).as("flagged"))
-      .as[KnScoreRow]
-    val folded = base.filter(size(col("t")) >= 2)
-      .select(col("docId"), explode(expr(
-        """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
-           (a, b) -> struct(a AS w1, b AS w2))""")).as("g"))
-      .select(col("docId"), col("g.w1").as("w1"), col("g.w2").as("w2"))
-      .join(t.bi, Seq("w1", "w2"), "left")
-      .join(t.ctx, Seq("w1"), "left")
-      .join(t.pcont, Seq("w2"), "left")
-      .withColumn("p_micro", when(col("ctxc").isNotNull,
-          coalesce(expr(
-            s"CAST((CAST(c12 AS DECIMAL(38,0)) * 1000000 - $d) div ctxc" +
-              " AS BIGINT)"), lit(0L)) +
-          expr(s"(CAST($d * nfollow AS DECIMAL(38,0)) div ctxc)" +
-            " * coalesce(pcont, 0L) div 1000000L").cast("long"))
-        .otherwise(coalesce(col("pcont"), lit(0L))))
-      .withColumn("lvl", when(col("c12").isNotNull, 2)
-        .when(col("pcont").isNotNull, 1).otherwise(0))
-      .select(col("docId"), col("p_micro"), col("lvl"))
-      .as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, KnScoreRow](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (docId, rows, _) =>
-          var nBi = 0L; var h2 = 0L; var h1 = 0L; var h0 = 0L; var sp = 0L
-          rows.foreach { case (_, p, lvl) =>
-            nBi += 1; sp += p
-            if (lvl == 2) h2 += 1 else if (lvl == 1) h1 += 1 else h0 += 1
-          }
-          val x = sp.toDouble / (nBi * 1000000L).toDouble
-          val score = math.floor(x * 10000.0 + 0.5) / 10000.0
-          Iterator(KnScoreRow(docId, nBi, h2, h1, h0, score,
-            score < graft.ops.TextOps.SbFlagThreshold))
-      }
-    folded.union(shorts)
-  }
-
-  /** Size-thresholded KN serving dispatch (round-10 verdict #2): the
-    * distinct-bigram count decides the path — at or under
-    * `maxBroadcastNgrams`, the SAME checkpointed tables collect into
-    * the [[KnModel]] broadcast (no retrain); past it they never
-    * collect and the sharded stream-static path serves. Both paths
-    * are row-identical (StreamingSpec parity through each). */
-  def knServe(docs: Dataset[LmDoc], train: org.apache.spark.sql.DataFrame,
-              trainPred: org.apache.spark.sql.Column,
-              maxBroadcastNgrams: Long = 2000000L): Dataset[KnScoreRow] = {
-    val t = trainKnTables(train, trainPred)
-    if (t.bi.count() <= maxBroadcastNgrams) {
-      val bi = t.bi.collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val ctx = t.ctx.collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val pc = t.pcont.collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      streamingKnScore(docs, KnModel(bi, ctx, pc))
-    } else streamingKnScoreSharded(docs, t)
-  }
-
-  /** Distributed [[SbModel]]: uni(w, c1), bi(wa, wb, c2),
-    * tri(w1, w2, w3, c3) as checkpointed DataFrames plus the scalar
-    * unigram total. */
-  case class SbTables(uni: org.apache.spark.sql.DataFrame,
-                      bi: org.apache.spark.sql.DataFrame,
-                      tri: org.apache.spark.sql.DataFrame,
-                      nTot: Long)
-
-  /** One batch pass over the train slice → [[SbTables]] (the
-    * [[trainSbModel]] tables, kept distributed; the
-    * [[trainKnTables]] key-repartition note applies). */
-  def trainSbTables(docs: org.apache.spark.sql.DataFrame,
-                    trainPred: org.apache.spark.sql.Column): SbTables = {
-    import org.apache.spark.sql.functions._
-    val t = docs.filter(trainPred)
-      .select(graft.ops.TextOps.tokens(col("text")).as("t"))
-      .filter(col("t").isNotNull)
-      .localCheckpoint()
-    val uni = t.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-      .repartition(col("w"))
-      .localCheckpoint()
-    val bi = t.filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
-           (a, b) -> struct(a AS wa, b AS wb))""")).as("b"))
-      .groupBy(col("b.wa").as("wa"), col("b.wb").as("wb"))
-      .agg(count(lit(1)).as("c2"))
-      .repartition(col("wa"), col("wb"))
-      .localCheckpoint()
-    val tri = t.filter(size(col("t")) >= 3)
-      .select(explode(expr(
-        """transform(sequence(1, size(t) - 2),
-           i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2,
-                       element_at(t, i + 2) AS w3))""")).as("g"))
-      .groupBy(col("g.w1").as("w1"), col("g.w2").as("w2"),
-        col("g.w3").as("w3"))
-      .agg(count(lit(1)).as("c3"))
-      .repartition(col("w1"), col("w2"), col("w3"))
-      .localCheckpoint()
-    val nTot = uni.agg(sum(col("c1"))).collect()(0).getLong(0)
-    SbTables(uni, bi, tri, nTot)
-  }
-
-  /** Sharded streaming Stupid-Backoff scorer — row-identical to
-    * [[streamingLmScore]] with the tables never collected: trigram
-    * occurrences LEFT-join tri / the two bigram roles / the two
-    * unigram roles, the ladder replays in DECIMAL(38,0) columns
-    * (tri c3·10⁶ div c12; backoff 0.4·(c23·10⁶ div cu2) div 10⁶;
-    * 0.4²·(cu3·10⁶ div N) div 10⁶), stateless per-doc fold. */
-  def streamingLmScoreSharded(docs: Dataset[LmDoc], t: SbTables)
-  : Dataset[LmScoreRow] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
-    val bi12 = t.bi.select(col("wa").as("w1"), col("wb").as("w2"),
-      col("c2").as("c12"))
-    val bi23 = t.bi.select(col("wa").as("w2"), col("wb").as("w3"),
-      col("c2").as("c23"))
-    val uni2 = t.uni.select(col("w").as("w2"), col("c1").as("cu2"))
-    val uni3 = t.uni.select(col("w").as("w3"), col("c1").as("cu3"))
-    val base = docs.toDF()
-      .select(col("docId"), graft.ops.TextOps.tokens(col("text")).as("t"))
-    val shorts = base.filter(col("t").isNull || size(col("t")) < 3)
-      .select(col("docId"), lit(0L).as("nTrigrams"), lit(0L).as("nTriHit"),
-        lit(0L).as("nBiBack"), lit(0L).as("nUniBack"), lit(0L).as("nOov"),
-        lit(-1.0).as("sbScore"), lit(true).as("flagged"))
-      .as[LmScoreRow]
-    val folded = base.filter(size(col("t")) >= 3)
-      .select(col("docId"), explode(expr(
-        """transform(sequence(1, size(t) - 2),
-           i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2,
-                       element_at(t, i + 2) AS w3))""")).as("g"))
-      .select(col("docId"), col("g.w1").as("w1"), col("g.w2").as("w2"),
-        col("g.w3").as("w3"))
-      .join(t.tri, Seq("w1", "w2", "w3"), "left")
-      .join(bi12, Seq("w1", "w2"), "left")
-      .join(bi23, Seq("w2", "w3"), "left")
-      .join(uni2, Seq("w2"), "left")
-      .join(uni3, Seq("w3"), "left")
-      .withColumn("p_micro",
-        when(col("c3").isNotNull, expr(
-          "CAST(CAST(c3 AS DECIMAL(38,0)) * 1000000 div c12 AS BIGINT)"))
-        .when(col("c23").isNotNull, expr(
-          "400000L * CAST(CAST(c23 AS DECIMAL(38,0)) * 1000000 div cu2" +
-            " AS BIGINT) div 1000000L"))
-        .when(col("cu3").isNotNull, expr(
-          s"160000L * CAST(CAST(cu3 AS DECIMAL(38,0)) * 1000000" +
-            s" div ${t.nTot} AS BIGINT) div 1000000L"))
-        .otherwise(lit(0L)))
-      .withColumn("lvl", when(col("c3").isNotNull, 3)
-        .when(col("c23").isNotNull, 2)
-        .when(col("cu3").isNotNull, 1).otherwise(0))
-      .select(col("docId"), col("p_micro"), col("lvl"))
-      .as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, LmScoreRow](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (docId, rows, _) =>
-          var n = 0L; var h3 = 0L; var h2 = 0L; var h1 = 0L; var h0 = 0L
-          var sp = 0L
-          rows.foreach { case (_, p, lvl) =>
-            n += 1; sp += p
-            lvl match {
-              case 3 => h3 += 1
-              case 2 => h2 += 1
-              case 1 => h1 += 1
-              case _ => h0 += 1
-            }
-          }
-          val x = sp.toDouble / (n * 1000000L).toDouble
-          val score =
-            if (x.isNaN || x.isInfinite) x
-            else math.floor(x * 10000.0 + 0.5) / 10000.0
-          Iterator(LmScoreRow(docId, n, h3, h2, h1, h0, score,
-            score < graft.ops.TextOps.SbFlagThreshold))
-      }
-    folded.union(shorts)
-  }
-
   case class WpTokRow(docId: Long, nWords: Long, nPieces: Long,
                       nUnk: Long, docFp: Long)
 
@@ -1359,6 +1008,8 @@ object StatefulOps {
     * collect discipline). */
   def trainWpVocab(docs: org.apache.spark.sql.DataFrame,
                    trainPred: org.apache.spark.sql.Column): Set[String] =
+    // One row holding the vocab array: ≤ ~120 pieces whatever the corpus
+    // size (120 at sf0.001 and at sf0.01).
     graft.ops.TextOps.wpVocabRow(docs.filter(trainPred))
       .collect()(0).getSeq[String](0).toSet
 
@@ -1379,7 +1030,7 @@ object StatefulOps {
   def streamingWordPiece(docs: Dataset[LmDoc], vocab: Set[String])
   : Dataset[WpTokRow] = {
     import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(vocab)
+    val bc = docs.sparkSession.sparkContext.broadcast(vocab) // sized as trainWpVocab states
     docs.mapPartitions { rows =>
       val v = bc.value
       // Same multilingual-honest extraction as TextOps.WpWordRe: ASCII
@@ -1427,25 +1078,6 @@ object StatefulOps {
           graft.ops.TextOps.hash64Scalar(sb.toString))
       }
     }
-  }
-
-  /** Size-thresholded Stupid-Backoff serving dispatch — total distinct
-    * n-grams across the three grains decide the path, as [[knServe]]. */
-  def sbServe(docs: Dataset[LmDoc], train: org.apache.spark.sql.DataFrame,
-              trainPred: org.apache.spark.sql.Column,
-              maxBroadcastNgrams: Long = 2000000L): Dataset[LmScoreRow] = {
-    val t = trainSbTables(train, trainPred)
-    val n = t.uni.count() + t.bi.count() + t.tri.count()
-    if (n <= maxBroadcastNgrams) {
-      val uni = t.uni.collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val bi = t.bi.collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val tri = t.tri.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-          r.getLong(3)).toMap
-      streamingLmScore(docs, SbModel(uni, bi, tri, t.nTot))
-    } else streamingLmScoreSharded(docs, t)
   }
 
   case class IntakeRow(docId: Long, nClean: Long, nMojibake: Long,

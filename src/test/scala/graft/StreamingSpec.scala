@@ -4,7 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
@@ -226,8 +229,74 @@ class StreamingSpec extends SparkSpec {
   private def newCheckpoint(prefix: String): String =
     tempDir(prefix).toString
 
+  /** Runs `op` over a MemoryStream fed `batches`, one micro-batch each,
+    * and returns each batch's output from an uninterrupted run on the
+    * session's (HDFS-backed) state store provider. It runs `op` a second
+    * time on RocksDB, where batch `failAt` throws once after its rows were
+    * computed (so its state version is written) and before they are
+    * recorded; that run then restarts from the same checkpoint. The two
+    * runs' per-batch outputs must be equal as multisets. */
+  private def restartEquivalent[T: Encoder, U](batches: Seq[Seq[T]], mode: String,
+      failAt: Int = 1)(op: Dataset[T] => Dataset[U]): Seq[Seq[U]] = {
+    require(batches.indices.contains(failAt), s"no batch $failAt")
+    def run(rocksDb: Boolean): Seq[Seq[U]] = {
+      val in = MemoryStream[T](spark)
+      val out = op(in.toDS())
+      val got = new java.util.concurrent.ConcurrentHashMap[Long, Seq[U]]()
+      val failNext = new java.util.concurrent.atomic.AtomicBoolean(rocksDb)
+      val ckpt = newCheckpoint("graft-restart-ckpt")
+      def start() = out.writeStream.outputMode(mode)
+        .foreachBatch { (ds: Dataset[U], id: Long) =>
+          val rows = ds.collect().toSeq
+          if (id == failAt && failNext.getAndSet(false))
+            throw new IllegalStateException(s"injected failure after batch $id ran")
+          got.put(id, rows); ()
+        }
+        .option("checkpointLocation", ckpt).start()
+      var q = start()
+      for ((batch, i) <- batches.zipWithIndex) {
+        in.addData(batch: _*)
+        if (rocksDb && i == failAt) {
+          intercept[Exception](q.processAllAvailable())
+          q.stop()
+          q = start()
+        }
+        q.processAllAvailable()
+      }
+      q.stop()
+      assert(!failNext.get, "the injected failure never fired")
+      // Each stateful operator ran on the provider this run asked for.
+      for (s <- q.lastProgress.stateOperators)
+        assert(s.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")) === rocksDb,
+          s.customMetrics)
+      batches.indices.map(i => Option(got.get(i.toLong)).getOrElse(fail(s"batch $i: no output")))
+    }
+    val uninterrupted = run(rocksDb = false)
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val restarted =
+      try run(rocksDb = true) finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // Arrays compare by reference; compare their elements.
+    def deep(x: Any): Any = x match {
+      case a: Array[_] => a.toSeq.map(deep)
+      case p: Product => p.productIterator.map(deep).toList
+      case v => v
+    }
+    def bag(rows: Seq[U]) = rows.groupMapReduce(deep)(_ => 1)(_ + _)
+    for (i <- batches.indices)
+      assert(bag(restarted(i)) === bag(uninterrupted(i)), s"batch $i after a restart on RocksDB")
+    uninterrupted
+  }
+
+  /** `xs` cut into `n` consecutive batches, the last taking the rest. */
+  private def inBatches[T](xs: Seq[T], n: Int): Seq[Seq[T]] = {
+    val size = xs.length / n
+    (0 until n).map(i => xs.slice(i * size, if (i == n - 1) xs.length else (i + 1) * size))
+  }
+
   private def storeSnapshot(): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
     InMemoryBulkClient.store.asScala.toMap
   }
 
@@ -245,7 +314,6 @@ class StreamingSpec extends SparkSpec {
 
   /** Names in the checkpoint's `log` directory. */
   private def logFiles(ckpt: String, log: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     Files.list(Paths.get(ckpt, log)).iterator.asScala.map(_.getFileName.toString).toSeq.sorted
   }
 
@@ -513,68 +581,6 @@ class StreamingSpec extends SparkSpec {
     assert(got === Map("2020-11-02 02:00:00" -> 2L, "2020-11-02 02:10:00" -> 1L))
   }
 
-  test("stateful deltas per user via flatMapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[StatefulOps.Reading]
-    val out = StatefulOps.deltasPerUser(in.toDS())
-    val q = out.toDF().writeStream.format("memory").queryName("deltas")
-      .outputMode("append").start()
-    // Two micro-batches: state must carry 130 across the batch boundary.
-    in.addData(
-      StatefulOps.Reading("u1", Timestamp.valueOf("2020-11-02 02:00:00"), 100),
-      StatefulOps.Reading("u1", Timestamp.valueOf("2020-11-02 02:05:00"), 130))
-    q.processAllAvailable()
-    in.addData(
-      StatefulOps.Reading("u1", Timestamp.valueOf("2020-11-02 02:10:00"), 95),
-      StatefulOps.Reading("u2", Timestamp.valueOf("2020-11-02 02:10:00"), 80))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("deltas")
-      .select("userId", "value", "delta")
-      .collect().map(r => (r.getString(0), r.getInt(1),
-        if (r.isNullAt(2)) None else Some(r.getInt(2)))).toSet
-    assert(got === Set(
-      ("u1", 100, None), ("u1", 130, Some(30)), ("u1", 95, Some(-35)),
-      ("u2", 80, None)))
-  }
-
-  test("stateful deltas via transformWithState (state API v2) match the v1 path") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[StatefulOps.Reading]
-      val out = StatefulOps.deltasPerUserV2(in.toDS())
-      val q = out.toDF().writeStream.format("memory").queryName("deltas_v2")
-        .outputMode("append").start()
-      in.addData(
-        StatefulOps.Reading("u1", Timestamp.valueOf("2020-11-02 02:00:00"), 100),
-        StatefulOps.Reading("u1", Timestamp.valueOf("2020-11-02 02:05:00"), 130))
-      q.processAllAvailable()
-      in.addData(
-        StatefulOps.Reading("u1", Timestamp.valueOf("2020-11-02 02:10:00"), 95),
-        StatefulOps.Reading("u2", Timestamp.valueOf("2020-11-02 02:10:00"), 80))
-      q.processAllAvailable(); q.stop()
-      val got = spark.table("deltas_v2")
-        .select("userId", "value", "delta")
-        .collect().map(r => (r.getString(0), r.getInt(1),
-          if (r.isNullAt(2)) None else Some(r.getInt(2)))).toSet
-      // identical rows to the flatMapGroupsWithState path's assert set
-      assert(got === Set(
-        ("u1", 100, None), ("u1", 130, Some(30)), ("u1", 95, Some(-35)),
-        ("u2", 80, None)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("streaming dedup within watermark drops cross-batch duplicates") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -647,7 +653,6 @@ class StreamingSpec extends SparkSpec {
 
   test("gap-dedup streaming twin matches the gated batch query across micro-batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     def ev(id: Long, hm: String) =
       StatefulOps.KeyedEvent("robert", Timestamp.valueOf(s"2020-11-02 $hm:00"), id)
     // 30-min horizon: e1 keep (no prev), e2 gap 600s drop, e3 gap 2400s
@@ -655,13 +660,8 @@ class StreamingSpec extends SparkSpec {
     // kept/dropped decision must flow through the per-key state.
     val batch1 = Seq(ev(1, "02:00"), ev(2, "02:10"))
     val batch2 = Seq(ev(3, "02:50"), ev(4, "03:05"))
-    val in = MemoryStream[StatefulOps.KeyedEvent]
-    val q = StatefulOps.gapDedup(in.toDS(), horizonSec = 1800)
-      .writeStream.format("memory").queryName("gap_dedup").outputMode("append").start()
-    in.addData(batch1: _*); q.processAllAvailable()
-    in.addData(batch2: _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("gap_dedup").select("eventId")
-      .collect().map(_.getLong(0)).toSet
+    val streamed = restartEquivalent(Seq(batch1, batch2), "append")(
+      StatefulOps.gapDedup(_, horizonSec = 1800)).flatten.map(_.eventId).toSet
     // The gated batch twin's expression over the same rows.
     val byKey = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("ts"), col("eventId"))
@@ -676,7 +676,6 @@ class StreamingSpec extends SparkSpec {
 
   test("span-dedup streaming twin: union of hits equals the batch rewrite's removal set") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val run = "one two three four five six seven eight" // SpanLen = 8 tokens
     val docsSeq = Seq(
       (0L, s"$run nine ten"),                // canonical holder
@@ -695,19 +694,14 @@ class StreamingSpec extends SparkSpec {
       .collect()
       .map(r => StatefulOps.SpanWindow(r.getLong(0), r.getInt(1), r.getLong(2)))
     val byDoc = grams.groupBy(_.docId)
-    val in = MemoryStream[StatefulOps.SpanWindow]
-    val q = StatefulOps.streamingSpanDedup(in.toDS())
-      .writeStream.format("memory").queryName("span_twin")
-      .outputMode("append").start()
     // Docs arrive in id order (the documented parity contract), split so
-    // the doc-9 verdicts must flow through cross-batch state.
-    in.addData(byDoc(0L).toSeq ++ byDoc(1L).toSeq: _*); q.processAllAvailable()
-    in.addData(byDoc(9L).toSeq: _*); q.processAllAvailable()
-    // At-least-once replay: the canonical must not move, no self-hits —
-    // re-emitted dup hits are absorbed by the downstream set-union.
-    in.addData(byDoc(9L).toSeq: _*); q.processAllAvailable(); q.stop()
-    val hits = spark.table("span_twin").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    // the doc-9 verdicts must flow through cross-batch state; the third
+    // batch is an at-least-once replay: the canonical must not move, no
+    // self-hits — re-emitted dup hits are absorbed by the downstream
+    // set-union.
+    val out = restartEquivalent(Seq(byDoc(0L).toSeq ++ byDoc(1L).toSeq, byDoc(9L).toSeq,
+      byDoc(9L).toSeq), "append")(StatefulOps.streamingSpanDedup).flatten
+    val hits = out.map(h => (h.docId, h.pos)).toSet
     val streamedRemoved: Map[Long, Long] = hits.toSeq
       .flatMap { case (d, p) => (p until p + 8).map(d -> _) }
       .distinct.groupBy(_._1).view.mapValues(_.size.toLong).toMap
@@ -721,8 +715,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamedRemoved(0L) === 0L && streamedRemoved(9L) === 16L)
     // Attribution parity with the GATED batch twin: the streamed hit
     // rows (with canonical sites) equal stream_span_marks exactly.
-    val streamedFull = spark.table("span_twin").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
+    val streamedFull = out.map(h => (h.docId, h.pos, h.canonDoc, h.canonPos)).toSet
     val marks = graft.ops.DedupOps.spanMarks(docs, "text", "doc_id")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
@@ -884,7 +877,6 @@ class StreamingSpec extends SparkSpec {
   test("bulk sinks send the (id, doc) pairs select(docId, to_json).collect() gives, " +
     "byte for byte, in bulkSize chunks in collect order, per session time zone and " +
     "null-field setting") {
-    import scala.jdk.CollectionConverters._
     val keys = Seq("key", "ts")
     val bulkSize = 3
     val rows = Seq(
@@ -1002,57 +994,10 @@ class StreamingSpec extends SparkSpec {
       val deadline = System.nanoTime + 30000000000L
       while (!events.contains((marker, "job")) && System.nanoTime < deadline) Thread.sleep(10)
       assert(events.contains((marker, "job")), "marker job never reached the listener")
-      import scala.jdk.CollectionConverters._
       val ofStream = events.asScala.toSeq.filter(_._1 == q.runId.toString).map(_._2)
       assert(ofStream.count(_ == "execution") === batches, ofStream)
       assert(ofStream.count(_ == "job") === batches, ofStream)
     } finally sc.removeSparkListener(listener)
-  }
-
-  test("heavy-hitters sketch as streaming state: final top-k equals batch exact") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // The sketch's merge/reduce make it per-key streaming state: each
-    // micro-batch folds its terms into the stored buffer; the emitted
-    // top-k converges to the full-stream answer. Bounded state by
-    // construction (capacity entries per key), unlike an exact per-term
-    // count map that grows with vocabulary.
-    val agg = new graft.catalyst.TopKSketchAgg(32)
-    val batch1 = Seq("en" -> "alpha", "en" -> "alpha", "en" -> "beta",
-      "de" -> "eins", "de" -> "zwei")
-    val batch2 = Seq("en" -> "beta", "en" -> "beta", "en" -> "beta",
-      "de" -> "eins", "de" -> "eins")
-    val all = batch1 ++ batch2
-    val in = MemoryStream[(String, String)]
-    val out = in.toDS().groupByKey(_._1)
-      .mapGroupsWithState[graft.catalyst.TopKBuf, (String, Long, String)](
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (lang, rows, state) =>
-          val buf = rows.foldLeft(state.getOption.getOrElse(agg.zero))(
-            (b, r) => agg.reduce(b, r._2))
-          state.update(buf)
-          val fin = agg.finish(buf)
-          (lang, fin.map(_._2).sum, fin.take(2).map(e => s"${e._1}:${e._2}").mkString(","))
-      }
-    val q = out.toDF().toDF("lang", "total", "top2").writeStream
-      .format("memory").queryName("sketch_state").outputMode("update").start()
-    in.addData(batch1: _*); q.processAllAvailable()
-    in.addData(batch2: _*); q.processAllAvailable(); q.stop()
-    // Final-state rows are the ones whose total equals the full stream's
-    // per-key count; their top-2 must equal the exact batch answer.
-    def exactTop2(lang: String) = all.filter(_._1 == lang).map(_._2)
-      .groupBy(identity).view.mapValues(_.size.toLong).toSeq
-      .sortBy { case (t, c) => (-c, t) }.take(2)
-      .map(e => s"${e._1}:${e._2}").mkString(",")
-    val rows = spark.table("sketch_state")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-    for (lang <- Seq("en", "de")) {
-      val total = all.count(_._1 == lang).toLong
-      val finals = rows.filter(r => r._1 == lang && r._2 == total)
-      assert(finals.nonEmpty, s"no final-state row for $lang")
-      assert(finals.forall(_._3 === exactTop2(lang)),
-        s"$lang top-2 drifted: ${finals.toSeq} vs ${exactTop2(lang)}")
-    }
   }
 
   test("streaming decontamination twin matches the batch contamination report") {
@@ -1100,8 +1045,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming funnel transitions match the gated batch funnel across batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{FunnelEvent, FunnelTransition}
+    import graft.streaming.StatefulOps.FunnelEvent
     val dir = "/root/testdata/sf0.001"
     // Batch truth: the gated query's per-user final stage + anchors.
     val batch = Catalog.queries("ref_funnel")(spark, dir).collect()
@@ -1113,16 +1057,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("user_id").cast("string"), col("ts"), col("event_type"))
       .orderBy("ts").collect()
       .map(r => FunnelEvent(r.getString(0), r.getTimestamp(1), r.getString(2)))
-    val in = MemoryStream[FunnelEvent]
-    val q = graft.streaming.StatefulOps
-      .streamingFunnel(in.toDS(), windowMs = 6L * 3600 * 1000)
-      .writeStream.format("memory").queryName("funnel_stream")
-      .outputMode("append").start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("funnel_stream").as[FunnelTransition].collect()
+    val streamed = restartEquivalent(inBatches(evs.toSeq, 3), "append")(
+      StatefulOps.streamingFunnel(_, windowMs = 6L * 3600 * 1000)).flatten
     // One transition per stage reached; max stage per user == batch stage.
     val perUser = streamed.groupBy(_.userId).view
       .mapValues(ts => ts.map(_.stage).max).toMap
@@ -1142,8 +1078,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming as-of enrichment matches the batch as-of join across batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{AsofEnriched, AsofEvent}
+    import graft.streaming.StatefulOps.AsofEvent
     // Interleaved changelog + lookups over 3 keys: dim updates every 70 s,
     // lookups every 60 s, including exact timestamp collisions (every
     // 420 s) where the inclusive-<= tie rule decides the answer, and
@@ -1168,15 +1103,8 @@ class StreamingSpec extends SparkSpec {
     // Stream the union in event-time order (dim first at equal ts), split
     // across 3 micro-batches — state must carry the last dim across splits.
     val evs = (dims ++ lookups).sortBy(e => (e.ts.getTime, !e.isDim, e.eventId))
-    val in = MemoryStream[AsofEvent]
-    val q = graft.streaming.StatefulOps.streamingAsof(in.toDS())
-      .writeStream.format("memory").queryName("asof_stream")
-      .outputMode("append").start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("asof_stream").as[AsofEnriched].collect()
+    val streamed = restartEquivalent(inBatches(evs, 3), "append")(
+      StatefulOps.streamingAsof).flatten
     assert(streamed.length === lookups.length) // one output row per lookup
     streamed.foreach { e =>
       val (bv, bt) = batch(e.eventId)
@@ -1190,49 +1118,9 @@ class StreamingSpec extends SparkSpec {
       d.key == l.key && d.ts.getTime == l.ts.getTime)))
   }
 
-  test("running z-score state matches batch cumulative stats across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{Reading, RunningZ}
-    val readings = (0 until 40).map { i =>
-      Reading(s"u${i % 3}", new java.sql.Timestamp(1700000000000L + i * 60000L),
-        80 + (i * 37) % 90)
-    }
-    // Batch expectation: z against the PRECEDING readings' sample stats
-    // (cumulative window, frame ending 1 before current).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("userId")).orderBy(col("ts"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val batch = readings.toDF()
-      .withColumn("n", count(lit(1)).over(w))
-      .withColumn("mu", avg(col("value")).over(w))
-      .withColumn("sd", stddev_samp(col("value")).over(w))
-      .withColumn("z", when(col("n") >= 2 && col("sd") > 0,
-        (col("value") - col("mu")) / col("sd")))
-      .select("userId", "value", "n", "z").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSet
-    val in = MemoryStream[Reading]
-    val q = graft.streaming.StatefulOps.runningZscore(in.toDS())
-      .writeStream.format("memory").queryName("runz")
-      .outputMode("append").start()
-    in.addData(readings.take(20): _*)
-    q.processAllAvailable()
-    in.addData(readings.drop(20): _*) // state must carry n/mean/m2 over
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("runz").as[RunningZ].collect()
-      .map(r => (r.userId, r.value, r.n, r.z)).toSet
-    // Welford vs sum-based window stddev agree to ~1e-9 relative; compare
-    // with rounding rather than bit equality.
-    def canon(s: Set[(String, Int, Long, Option[Double])]) =
-      s.map { case (u, v, n, z) => (u, v, n, z.map(x => math.round(x * 1e6))) }
-    assert(canon(streamed) === canon(batch))
-  }
-
   test("streaming near-dup flags arrivals against state from earlier batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{BucketDoc, NearDupHit}
+    import graft.streaming.StatefulOps.BucketDoc
     val base = "the quick brown fox jumps over the lazy dog again and again today ok"
     val docs = Seq(
       (0L, base),
@@ -1266,15 +1154,9 @@ class StreamingSpec extends SparkSpec {
     } yield (b.docId, a.docId)).groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
     // Stream in two batches split mid-corpus: doc 3's duplicate-of-0 hit
     // can only come from bucket STATE carried over from batch 1.
-    val in = MemoryStream[BucketDoc]
-    val q = graft.streaming.StatefulOps.streamingNearDup(in.toDS(), 0.5)
-      .writeStream.format("memory").queryName("neardup_stream")
-      .outputMode("append").start()
-    in.addData(bucketRows.filter(_.docId <= 2).toSeq: _*)
-    q.processAllAvailable()
-    in.addData(bucketRows.filter(_.docId >= 3).toSeq: _*)
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("neardup_stream").as[NearDupHit].collect()
+    val got = restartEquivalent(Seq(bucketRows.filter(_.docId <= 2).toSeq,
+        bucketRows.filter(_.docId >= 3).toSeq), "append")(
+        StatefulOps.streamingNearDup(_, 0.5)).flatten
       .groupBy(_.docId).view.mapValues(_.map(_.dupOf).min).toMap
     assert(got === expected)
     assert(got.get(3L).contains(0L), "cross-batch exact copy must flag via state")
@@ -1307,19 +1189,11 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dup hot bucket saturates at maxPerBucket, comparisons continue") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{BucketDoc, NearDupHit}
+    import graft.streaming.StatefulOps.BucketDoc
     val sig = Seq(1L, 2L, 3L, 4L)
-    val in = MemoryStream[BucketDoc]
-    val q = graft.streaming.StatefulOps
-      .streamingNearDup(in.toDS(), threshold = 0.5, maxPerBucket = 1)
-      .writeStream.format("memory").queryName("neardup_cap")
-      .outputMode("append").start()
-    in.addData(BucketDoc(0, 5L, 1L, sig), BucketDoc(0, 5L, 2L, sig))
-    q.processAllAvailable()
-    in.addData(BucketDoc(0, 5L, 3L, sig))
-    q.processAllAvailable(); q.stop()
-    val hits = spark.table("neardup_cap").as[NearDupHit].collect()
+    val hits = restartEquivalent(Seq(Seq(BucketDoc(0, 5L, 1L, sig), BucketDoc(0, 5L, 2L, sig)),
+        Seq(BucketDoc(0, 5L, 3L, sig))), "append")(
+        StatefulOps.streamingNearDup(_, threshold = 0.5, maxPerBucket = 1)).flatten
       .map(h => (h.docId, h.dupOf)).toSet
     // doc 1 fills the bucket; docs 2 and 3 still compare against it, but
     // doc 2 was never STORED, so (3 -> 2) must not exist.
@@ -1362,8 +1236,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming heavy hitters match the gated batch sketch across batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{TermEvent, TopTermRow}
+    import graft.streaming.StatefulOps.TermEvent
     val dir = "/root/testdata/sf0.001"
     // Batch truth: the gated SpaceSaving query (exact regime: capacity
     // 256 >> vocabulary).
@@ -1375,27 +1248,30 @@ class StreamingSpec extends SparkSpec {
         explode(graft.ops.TextOps.tokens(col("text"))).as("term"))
       .orderBy("doc_id").select("lang", "term").collect()
       .map(r => TermEvent(r.getString(0), r.getString(1)))
-    // The per-group sketch state must carry across micro-batch splits.
-    val latest = scala.collection.mutable.Map[String, Array[TopTermRow]]()
-    val in = MemoryStream[TermEvent]
-    val q = graft.streaming.StatefulOps.streamingTopTerms(in.toDS(), 256, 5)
-      .writeStream.outputMode("update")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[TopTermRow], _: Long) =>
-        ds.collect().groupBy(_.grp).foreach { case (g, rows) => latest(g) = rows }
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
-    val streamed = latest.values.flatten
-      .map(t => (t.grp, t.rk, t.term, t.cnt)).toSet
-    assert(streamed === batch)
+    // The per-group sketch state must carry across micro-batch splits;
+    // each group's last snapshot is its result.
+    def snapshots(out: Seq[Seq[StatefulOps.TopTermRow]]) =
+      out.flatMap(_.groupBy(_.grp)).toMap.view.mapValues(_.map(t => (t.rk, t.term, t.cnt))).toMap
+    val streamed = snapshots(restartEquivalent(inBatches(evs.toSeq, 3), "update")(
+      StatefulOps.streamingTopTerms(_, 256, 5)))
+    assert(streamed.toSeq.flatMap { case (g, rows) => rows.map(r => (g, r._1, r._2, r._3)) }
+      .toSet === batch)
+    // Two batches in which en's top term flips from alpha to beta: the
+    // final top-2 is the exact count over both batches.
+    val flip = Seq(
+      Seq("en" -> "alpha", "en" -> "alpha", "en" -> "beta", "de" -> "eins", "de" -> "zwei"),
+      Seq("en" -> "beta", "en" -> "beta", "en" -> "beta", "de" -> "eins", "de" -> "eins"))
+      .map(_.map { case (g, t) => TermEvent(g, t) })
+    val flipped = restartEquivalent(flip, "update")(StatefulOps.streamingTopTerms(_, 32, 2))
+    assert(snapshots(flipped.take(1))("en").head === ((1, "alpha", 2L)))
+    assert(snapshots(flipped) === Map(
+      "en" -> Seq((1, "beta", 4L), (2, "alpha", 2L)),
+      "de" -> Seq((1, "eins", 3L), (2, "zwei", 1L))))
   }
 
   test("streaming time-in-range converges to the batch clinical report across batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{GlucoseReading, TirRow}
+    import graft.streaming.StatefulOps.GlucoseReading
     val dir = "/root/testdata/sf0.001"
     val batch = graft.Catalog.queries("ref_time_in_range")(spark, dir)
       .collect()
@@ -1406,17 +1282,8 @@ class StreamingSpec extends SparkSpec {
       .orderBy("sec", "event_id").collect()
       .map(r => GlucoseReading(r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
-    val latest = scala.collection.mutable.Map[Long, TirRow]()
-    val in = MemoryStream[GlucoseReading]
-    val q = graft.streaming.StatefulOps.streamingTimeInRange(in.toDS())
-      .writeStream.outputMode("update")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[TirRow], _: Long) =>
-        ds.collect().foreach(t => latest(t.userId) = t)
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val latest = restartEquivalent(inBatches(evs.toSeq, 3), "update")(
+      StatefulOps.streamingTimeInRange).flatten.map(t => t.userId -> t).toMap
     val streamed = latest.view.mapValues(t => (t.totalSec, t.veryLowSec,
       t.lowSec, t.inRangeSec, t.highSec, t.veryHighSec, t.tirMicro)).toMap
     assert(streamed === batch)
@@ -1424,8 +1291,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming CMS sketch equals the batch UDAF bit-for-bit across batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{CmsState, HashEvent}
+    import graft.streaming.StatefulOps.HashEvent
     val dir = "/root/testdata/sf0.001"
     // Batch truth: the same cms_counts UDAF the gated query runs,
     // per source group.
@@ -1442,17 +1308,8 @@ class StreamingSpec extends SparkSpec {
         graft.ops.TextOps.hash64(col("term")).as("h"))
       .orderBy("doc_id").select("source", "h").collect()
       .map(r => HashEvent(r.getString(0), r.getLong(1)))
-    val latest = scala.collection.mutable.Map[String, CmsState]()
-    val in = MemoryStream[HashEvent]
-    val q = graft.streaming.StatefulOps.streamingCms(in.toDS())
-      .writeStream.outputMode("update")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[CmsState], _: Long) =>
-        ds.collect().foreach(e => latest(e.grp) = e)
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val latest = restartEquivalent(inBatches(evs.toSeq, 3), "update")(
+      StatefulOps.streamingCms).flatten.map(e => e.grp -> e).toMap
     assert(latest.keySet === batch.keySet)
     for ((g, sk) <- batch) {
       assert(java.util.Arrays.equals(latest(g).sketch, sk),
@@ -1463,8 +1320,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming HLL distinct estimate matches the batch sketch across batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{DistinctEst, IdEvent}
+    import graft.streaming.StatefulOps.IdEvent
     val dir = "/root/testdata/sf0.001"
     // Batch truth: Spark's own hll_sketch_agg at the same lgConfigK.
     val batch = graft.Tables.documents(spark, dir)
@@ -1474,27 +1330,17 @@ class StreamingSpec extends SparkSpec {
     val evs = graft.Tables.documents(spark, dir)
       .select(col("source"), col("doc_id")).orderBy("doc_id").collect()
       .map(r => IdEvent(r.getString(0), r.getLong(1)))
-    val latest = scala.collection.mutable.Map[String, Long]()
-    val in = MemoryStream[IdEvent]
-    val q = graft.streaming.StatefulOps.streamingDistinct(in.toDS(), 12)
-      .writeStream.outputMode("update")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[DistinctEst], _: Long) =>
-        ds.collect().foreach(e => latest(e.grp) = e.est)
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    // Replay the first batch in full (at-least-once): set semantics mean
-    // the duplicates cannot move any estimate.
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
-    assert(latest.toMap === batch)
+    // The second batch replays the first in full (at-least-once): set
+    // semantics mean the duplicates cannot move any estimate.
+    val Seq(b1, b2, b3) = inBatches(evs.toSeq, 3)
+    val latest = restartEquivalent(Seq(b1, b1, b2, b3), "update")(
+      StatefulOps.streamingDistinct(_, 12)).flatten.map(e => e.grp -> e.est).toMap
+    assert(latest === batch)
   }
 
   test("streaming trend arrows equal the batch classification across micro-batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{ArrowRow, GlucoseReading}
+    import graft.streaming.StatefulOps.GlucoseReading
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("ref_trend_arrows")(spark, dir)
       .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id")) ->
@@ -1506,25 +1352,16 @@ class StreamingSpec extends SparkSpec {
       .orderBy("sec", "event_id").collect()
       .map(r => GlucoseReading(r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
-    val got = scala.collection.mutable.Map[(Long, Long), (Option[Double], String)]()
-    val in = MemoryStream[GlucoseReading]
-    val q = graft.streaming.StatefulOps.streamingTrendArrows(in.toDS())
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[ArrowRow], _: Long) =>
-        ds.collect().foreach(a => got((a.userId, a.eventId)) = (a.rate, a.arrow))
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(evs.toSeq, 3), "append")(
+      StatefulOps.streamingTrendArrows).flatten
+      .map(a => (a.userId, a.eventId) -> (a.rate, a.arrow)).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
   }
 
   test("streaming CDC classify equals the batch changelog across micro-batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{CdcRow, CdcUpdate}
+    import graft.streaming.StatefulOps.CdcUpdate
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("stream_cdc_classify")(spark, dir)
       .collect().map(r => r.getAs[Long]("event_id") ->
@@ -1535,25 +1372,15 @@ class StreamingSpec extends SparkSpec {
       .orderBy("sec", "event_id").collect()
       .map(r => CdcUpdate(r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getDouble(4)))
-    val got = scala.collection.mutable.Map[Long, String]()
-    val in = MemoryStream[CdcUpdate]
-    val q = graft.streaming.StatefulOps.streamingCdcClassify(in.toDS())
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[CdcRow], _: Long) =>
-        ds.collect().foreach(c => got(c.eventId) = c.status)
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(evs.toSeq, 3), "append")(
+      StatefulOps.streamingCdcClassify).flatten.map(c => c.eventId -> c.status).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
   }
 
   test("streaming discovery curve equals the batch cumulative distinct") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{DiscoveryRow, TypeEvent}
+    import graft.streaming.StatefulOps.TypeEvent
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("q_cumulative_distinct")(spark, dir)
       .collect().map(r => r.getAs[Long]("event_id") ->
@@ -1564,26 +1391,16 @@ class StreamingSpec extends SparkSpec {
       .orderBy("sec", "event_id").collect()
       .map(r => TypeEvent(r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3)))
-    val got = scala.collection.mutable.Map[Long, Long]()
-    val in = MemoryStream[TypeEvent]
-    val q = graft.streaming.StatefulOps.streamingDiscovery(in.toDS())
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[DiscoveryRow], _: Long) =>
-        ds.collect().foreach(r => got(r.eventId) = r.cumDistinct)
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(evs.toSeq, 3), "append")(
+      StatefulOps.streamingDiscovery).flatten.map(r => r.eventId -> r.cumDistinct).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
   }
 
   test("streaming k-anonymity suppress-until-k equals the batch gate " +
     "across micro-batch splits") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{KAnonRelease, QiDoc}
+    import graft.streaming.StatefulOps.QiDoc
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("stream_k_anon")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -1593,29 +1410,19 @@ class StreamingSpec extends SparkSpec {
         expr("n_chars div 1000")).as("qi"), col("doc_id"))
       .orderBy("doc_id").collect()
       .map(r => QiDoc(r.getString(0), r.getLong(1)))
-    val got = scala.collection.mutable.Map[Long, (String, Long)]()
-    val in = MemoryStream[QiDoc]
-    val q = graft.streaming.StatefulOps
-      .streamingKAnon(in.toDS(), graft.queries.PipelineQueries.KAnon)
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[KAnonRelease], _: Long) =>
-        ds.collect().foreach(r => got(r.docId) = (r.qi, r.releasedBy))
-      }.start()
-    val third = docs.length / 3
-    in.addData(docs.take(third): _*); q.processAllAvailable()
-    in.addData(docs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(docs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(docs.toSeq, 3), "append")(
+      StatefulOps.streamingKAnon(_, graft.queries.PipelineQueries.KAnon)).flatten
+      .map(r => r.docId -> (r.qi, r.releasedBy)).toMap
     // Same published rows, same release attribution — and nothing from
     // a below-k class leaked.
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
   }
 
   test("streaming doubling-release DP counter equals the batch gate " +
     "across micro-batch splits") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{CatDoc, DpRelease}
+    import graft.streaming.StatefulOps.CatDoc
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("stream_geo_dp")(spark, dir)
       .collect().map(r => (r.getAs[String]("qi"), r.getAs[Long]("true_n")) ->
@@ -1625,27 +1432,17 @@ class StreamingSpec extends SparkSpec {
       .select(col("lang").as("qi"), col("doc_id"))
       .orderBy("doc_id").collect()
       .map(r => CatDoc(r.getString(0), r.getLong(1)))
-    val got = scala.collection.mutable.Map[(String, Long), (Long, Long, Long)]()
-    val in = MemoryStream[CatDoc]
-    val q = graft.streaming.StatefulOps.streamingGeoDp(in.toDS())
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[DpRelease], _: Long) =>
-        ds.collect().foreach(r =>
-          got((r.qi, r.trueN)) = (r.noise, r.releasedN, r.releasedAt))
-      }.start()
-    val third = docs.length / 3
-    in.addData(docs.take(third): _*); q.processAllAvailable()
-    in.addData(docs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(docs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(docs.toSeq, 3), "append")(
+      StatefulOps.streamingGeoDp).flatten
+      .map(r => (r.qi, r.trueN) -> (r.noise, r.releasedN, r.releasedAt)).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
   }
 
   test("streaming binary-tree DP releases equal the batch gate at every " +
     "arrival across micro-batch splits") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{CatDoc, TreeRelease}
+    import graft.streaming.StatefulOps.CatDoc
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("stream_tree_dp")(spark, dir)
       .collect().map(r => (r.getAs[String]("qi"), r.getAs[Long]("true_n")) ->
@@ -1654,27 +1451,17 @@ class StreamingSpec extends SparkSpec {
       .select(col("lang").as("qi"), col("doc_id"))
       .orderBy("doc_id").collect()
       .map(r => CatDoc(r.getString(0), r.getLong(1)))
-    val got = scala.collection.mutable.Map[(String, Long), (Long, Long)]()
-    val in = MemoryStream[CatDoc]
-    val q = graft.streaming.StatefulOps.streamingTreeDp(in.toDS())
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[TreeRelease], _: Long) =>
-        ds.collect().foreach(r =>
-          got((r.qi, r.trueN)) = (r.nNodes, r.releasedN))
-      }.start()
-    val third = docs.length / 3
-    in.addData(docs.take(third): _*); q.processAllAvailable()
-    in.addData(docs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(docs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(docs.toSeq, 3), "append")(
+      StatefulOps.streamingTreeDp).flatten
+      .map(r => (r.qi, r.trueN) -> (r.nNodes, r.releasedN)).toMap
     assert(got.size === batch.size) // one release per arrival, no extras
-    assert(got.toMap === batch)
+    assert(got === batch)
   }
 
   test("streaming Stupid-Backoff scoring equals the gated batch serve " +
     "rows across micro-batch splits") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{LmDoc, LmScoreRow}
+    import graft.streaming.StatefulOps.LmDoc
     val dir = "/root/testdata/sf0.001"
     // Batch truth: the gated serve view (non-train docs only).
     val batch = Catalog.queries("stream_lm_score")(spark, dir)
@@ -1692,21 +1479,12 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).collect()
       .map(r => LmDoc(r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1)))
-    val got = scala.collection.mutable.Map[Long,
-      (Long, Long, Long, Long, Long, Double, Boolean)]()
-    val in = MemoryStream[LmDoc]
-    val q = graft.streaming.StatefulOps.streamingLmScore(in.toDS(), model)
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[LmScoreRow], _: Long) =>
-        ds.collect().foreach(r => got(r.docId) = (r.nTrigrams, r.nTriHit,
-          r.nBiBack, r.nUniBack, r.nOov, r.sbScore, r.flagged))
-      }.start()
-    val third = docs.length / 3
-    in.addData(docs.take(third): _*); q.processAllAvailable()
-    in.addData(docs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(docs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(docs.toSeq, 3), "append")(
+      StatefulOps.streamingLmScore(_, model)).flatten
+      .map(r => r.docId -> (r.nTrigrams, r.nTriHit, r.nBiBack, r.nUniBack, r.nOov,
+        r.sbScore, r.flagged)).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
     // the corpus must exercise the backoff ladder BELOW the trigram
     // level somewhere (the shared synthetic vocab means true OOV may
     // not exist; the scalar OOV branch is pinned separately below)
@@ -1726,8 +1504,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming Kneser-Ney scoring equals the gated batch serve rows " +
     "across micro-batch splits") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{LmDoc, KnScoreRow}
+    import graft.streaming.StatefulOps.LmDoc
     val dir = "/root/testdata/sf0.001"
     // Batch truth: the gated KN serve view (non-train docs only) —
     // rows derived from the same knBigram pipeline text_kneser_ney
@@ -1743,21 +1520,12 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).collect()
       .map(r => LmDoc(r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1)))
-    val got = scala.collection.mutable.Map[Long,
-      (Long, Long, Long, Long, Double, Boolean)]()
-    val in = MemoryStream[LmDoc]
-    val q = graft.streaming.StatefulOps.streamingKnScore(in.toDS(), model)
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[KnScoreRow], _: Long) =>
-        ds.collect().foreach(r => got(r.docId) = (r.nBigrams, r.nKnHit,
-          r.nContBack, r.nOov, r.knScore, r.flagged))
-      }.start()
-    val third = docs.length / 3
-    in.addData(docs.take(third): _*); q.processAllAvailable()
-    in.addData(docs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(docs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(docs.toSeq, 3), "append")(
+      StatefulOps.streamingKnScore(_, model)).flatten
+      .map(r => r.docId -> (r.nBigrams, r.nKnHit, r.nContBack, r.nOov, r.knScore,
+        r.flagged)).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
     // the ladder's levels must all be exercised somewhere: KN hits
     // and at least one continuation-backoff or OOV occurrence
     val sums = got.values.foldLeft((0L, 0L, 0L)) { (a, v) =>
@@ -1777,8 +1545,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming WordPiece tokenization equals the gated batch serve " +
     "rows across micro-batch splits (JVM max-munch vs the HOF fold)") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{LmDoc, WpTokRow}
+    import graft.streaming.StatefulOps.LmDoc
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("stream_wordpiece")(spark, dir)
       .collect().map(r => r.getLong(0) ->
@@ -1792,19 +1559,11 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).collect()
       .map(r => LmDoc(r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1)))
-    val got = scala.collection.mutable.Map[Long, (Long, Long, Long, Long)]()
-    val in = MemoryStream[LmDoc]
-    val q = graft.streaming.StatefulOps.streamingWordPiece(in.toDS(), vocab)
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[WpTokRow], _: Long) =>
-        ds.collect().foreach(r =>
-          got(r.docId) = (r.nWords, r.nPieces, r.nUnk, r.docFp))
-      }.start()
-    val half = docs.length / 2
-    in.addData(docs.take(half): _*); q.processAllAvailable()
-    in.addData(docs.drop(half): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(docs.toSeq, 2), "append")(
+      StatefulOps.streamingWordPiece(_, vocab)).flatten
+      .map(r => r.docId -> (r.nWords, r.nPieces, r.nUnk, r.docFp)).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
     // the serve slice must actually exercise tokenization (nonzero
     // words and multi-piece segmentations somewhere)
     assert(got.values.map(_._1).sum > 0L)
@@ -1843,8 +1602,7 @@ class StreamingSpec extends SparkSpec {
     "across micro-batch splits (independent JVM regex chain vs the " +
     "codegen'd probe frames)") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{IntakeRow, LmDoc}
+    import graft.streaming.StatefulOps.LmDoc
     val d = "/root/testdata/sf0.001"
     val batch = Catalog.queries("pipeline_crawl_intake")(spark, d)
       .collect().map(r => r.getLong(0) ->
@@ -1860,129 +1618,18 @@ class StreamingSpec extends SparkSpec {
                      else " " + iq.MultiScript
         LmDoc(r.getLong(0), iq.HtmlPre + t + suffix + iq.HtmlPost)
       }
-    val got = scala.collection.mutable
-      .Map[Long, (Long, Long, String, Boolean)]()
-    val in = MemoryStream[LmDoc]
-    val q = graft.streaming.StatefulOps.streamingCrawlIntake(in.toDS())
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[IntakeRow],
-                       _: Long) =>
-        ds.collect().foreach(r =>
-          got(r.docId) = (r.nClean, r.nMojibake, r.dominant, r.keep))
-      }.start()
-    val half = docs.length / 2
-    in.addData(docs.take(half): _*); q.processAllAvailable()
-    in.addData(docs.drop(half): _*); q.processAllAvailable(); q.stop()
+    val got = restartEquivalent(inBatches(docs.toSeq, 2), "append")(
+      StatefulOps.streamingCrawlIntake).flatten
+      .map(r => r.docId -> (r.nClean, r.nMojibake, r.dominant, r.keep)).toMap
     assert(got.size === batch.size)
-    assert(got.toMap === batch)
+    assert(got === batch)
     // the fixture must exercise BOTH keep branches
     assert(got.values.exists(_._4) && got.values.exists(!_._4))
   }
 
-  test("SHARDED Kneser-Ney serving (stream-static joins, tables never " +
-    "collected) equals the gated batch serve rows across micro-batch " +
-    "splits; the size dispatch picks it past the threshold") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps
-    import graft.streaming.StatefulOps.{LmDoc, KnScoreRow}
-    val dir = "/root/testdata/sf0.001"
-    val batch = Catalog.queries("stream_kn_score")(spark, dir)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-          r.getDouble(5), r.getBoolean(6)))).toMap
-    val train = graft.Tables.documents(spark, dir)
-    // The fixture's distinct-bigram vocabulary EXCEEDS the threshold
-    // of 1, so knServe must take the sharded path (guard: the tables
-    // really are bigger than the budget).
-    val tables = StatefulOps.trainKnTables(train, col("lang") === "en")
-    assert(tables.bi.count() > 1L, "fixture must exceed the threshold")
-    val docs = train.filter(!(col("lang") === "en"))
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => LmDoc(r.getLong(0),
-        if (r.isNullAt(1)) null else r.getString(1)))
-    val got = scala.collection.mutable.Map[Long,
-      (Long, Long, Long, Long, Double, Boolean)]()
-    val in = MemoryStream[LmDoc]
-    val q = StatefulOps.knServe(in.toDS(), train, col("lang") === "en",
-        maxBroadcastNgrams = 1L)
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[KnScoreRow], _: Long) =>
-        ds.collect().foreach(r => got(r.docId) = (r.nBigrams, r.nKnHit,
-          r.nContBack, r.nOov, r.knScore, r.flagged))
-      }.start()
-    val third = docs.length / 3
-    in.addData(docs.take(third): _*); q.processAllAvailable()
-    in.addData(docs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(docs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
-    assert(got.size === batch.size)
-    assert(got.toMap === batch)
-    // The dispatch's broadcast arm (collecting the SAME checkpointed
-    // tables — no retrain) scores one probe doc identically to the
-    // trainKnModel route already pinned above.
-    val probe = docs.take(5).toSeq
-    val viaModel = StatefulOps.streamingKnScore(probe.toDS(),
-      StatefulOps.trainKnModel(train, col("lang") === "en")).collect()
-    val viaDispatch = StatefulOps.knServe(probe.toDS(), train,
-      col("lang") === "en").collect()
-    assert(viaDispatch.sortBy(_.docId).toSeq ===
-      viaModel.sortBy(_.docId).toSeq)
-  }
-
-  test("SHARDED Stupid-Backoff serving equals the gated batch serve rows " +
-    "across micro-batch splits") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps
-    import graft.streaming.StatefulOps.{LmDoc, LmScoreRow}
-    val dir = "/root/testdata/sf0.001"
-    val batch = Catalog.queries("stream_lm_score")(spark, dir)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-          r.getLong(5), r.getDouble(6), r.getBoolean(7)))).toMap
-    val train = graft.Tables.documents(spark, dir)
-    val docs = train.filter(!(col("lang") === "en"))
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => LmDoc(r.getLong(0),
-        if (r.isNullAt(1)) null else r.getString(1)))
-    val got = scala.collection.mutable.Map[Long,
-      (Long, Long, Long, Long, Long, Double, Boolean)]()
-    val in = MemoryStream[LmDoc]
-    val q = StatefulOps.sbServe(in.toDS(), train, col("lang") === "en",
-        maxBroadcastNgrams = 1L)
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[LmScoreRow], _: Long) =>
-        ds.collect().foreach(r => got(r.docId) = (r.nTrigrams, r.nTriHit,
-          r.nBiBack, r.nUniBack, r.nOov, r.sbScore, r.flagged))
-      }.start()
-    val third = docs.length / 3
-    in.addData(docs.take(third): _*); q.processAllAvailable()
-    in.addData(docs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(docs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
-    assert(got.size === batch.size)
-    assert(got.toMap === batch)
-    // True-OOV probe through the sharded ladder: never-seen tokens
-    // contribute 0 mass at level 0 and flag.
-    val oovIn = MemoryStream[LmDoc]
-    val oovGot = scala.collection.mutable.ListBuffer[LmScoreRow]()
-    val q2 = StatefulOps.streamingLmScoreSharded(
-        oovIn.toDS(),
-        StatefulOps.trainSbTables(train, col("lang") === "en"))
-      .writeStream.outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[LmScoreRow], _: Long) =>
-        oovGot ++= ds.collect(); ()
-      }.start()
-    oovIn.addData(LmDoc(999999L, "zzq1 zzq2 zzq3 zzq4"))
-    q2.processAllAvailable(); q2.stop()
-    val oov = oovGot.head
-    assert(oov.nOov === 2L && oov.nTrigrams === 2L &&
-      oov.sbScore === 0.0 && oov.flagged)
-  }
-
   test("streaming EWMA snapshot is bit-equal to the batch fold across micro-batches") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{EwmaRow, GlucoseReading}
+    import graft.streaming.StatefulOps.GlucoseReading
     val dir = "/root/testdata/sf0.001"
     val batch = Catalog.queries("ref_ewma_trend")(spark, dir)
       .collect().map(r => r.getAs[Long]("user_id") ->
@@ -1993,17 +1640,8 @@ class StreamingSpec extends SparkSpec {
       .orderBy("sec", "event_id").collect()
       .map(r => GlucoseReading(r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
-    val latest = scala.collection.mutable.Map[Long, EwmaRow]()
-    val in = MemoryStream[GlucoseReading]
-    val q = graft.streaming.StatefulOps.streamingEwma(in.toDS())
-      .writeStream.outputMode("update")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EwmaRow], _: Long) =>
-        ds.collect().foreach(e => latest(e.userId) = e)
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val latest = restartEquivalent(inBatches(evs.toSeq, 3), "update")(
+      StatefulOps.streamingEwma).flatten.map(e => e.userId -> e).toMap
     assert(latest.keySet === batch.keySet)
     for ((u, (n, e)) <- batch) {
       assert(latest(u).n === n)
@@ -2013,8 +1651,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming KMV sketch is byte-equal to the batch aggregator across batches and replays") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{IdEvent, KmvEst}
+    import graft.streaming.StatefulOps.IdEvent
     val dir = "/root/testdata/sf0.001"
     val k = 32
     // Batch truth: the SAME typed aggregator the gate query uses.
@@ -2025,18 +1662,9 @@ class StreamingSpec extends SparkSpec {
     val evs = graft.Tables.documents(spark, dir)
       .select(col("source"), col("doc_id")).orderBy("doc_id").collect()
       .map(r => IdEvent(r.getString(0), r.getLong(1)))
-    val latest = scala.collection.mutable.Map[String, KmvEst]()
-    val in = MemoryStream[IdEvent]
-    val q = graft.streaming.StatefulOps.streamingKmv(in.toDS(), k)
-      .writeStream.outputMode("update")
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[KmvEst], _: Long) =>
-        ds.collect().foreach(e => latest(e.grp) = e)
-      }.start()
-    val third = evs.length / 3
-    in.addData(evs.take(third): _*); q.processAllAvailable()
-    in.addData(evs.take(third): _*); q.processAllAvailable() // replay
-    in.addData(evs.slice(third, 2 * third): _*); q.processAllAvailable()
-    in.addData(evs.drop(2 * third): _*); q.processAllAvailable(); q.stop()
+    val Seq(b1, b2, b3) = inBatches(evs.toSeq, 3)
+    val latest = restartEquivalent(Seq(b1, b1, b2, b3), "update")( // b1 replayed
+      StatefulOps.streamingKmv(_, k)).flatten.map(e => e.grp -> e).toMap
     assert(latest.keySet === batch.keySet)
     for ((g, sk) <- batch) {
       assert(latest(g).sketch === sk, s"kmv state drift for group $g")
